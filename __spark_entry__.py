@@ -12,7 +12,10 @@ scale factor via ``count(orders)`` on both sides.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
@@ -3097,14 +3100,22 @@ PV_K = 4
 PV_EPS = 0.03
 
 
+# one nonce per process: the Spark side and its oracle share it, a snapshot
+# left behind by any other run never does
+_PV_RUN_NONCE = uuid.uuid4().hex[:12]
+
+
 def _partition_snapshot_path(sf_name: str) -> str:
     """Shared Spark/DuckDB location of the partition_verify (id, block)
-    snapshot — keyed by sf dir name so concurrent checks at different scales
-    don't collide."""
+    snapshot — keyed by the sf under test and this run's nonce, so checks at
+    different scales don't collide and the oracle can only read the
+    snapshot written by the Spark side of the same run (a missing snapshot
+    fails the oracle instead of a stale one passing it)."""
     import tempfile
 
     return os.path.join(
-        tempfile.gettempdir(), f"kaminpar_partition_verify_{sf_name}.parquet"
+        tempfile.gettempdir(),
+        f"kaminpar_partition_verify_{sf_name}_{_PV_RUN_NONCE}.parquet",
     )
 
 
@@ -3129,6 +3140,7 @@ def _q_partition_verify(spark, sf_dir):
         .write.mode("overwrite")
         .parquet(snap)
     )
+    atexit.register(shutil.rmtree, snap, True)
     part = spark.read.parquet(snap)
 
     tw = g.total_node_weight()
@@ -6350,10 +6362,13 @@ SELECT id, comm FROM {final}"""
 
 def _partition_verify_sql() -> str:
     """Recompute the partition_verify metrics from the SAME (id, block)
-    snapshot the Spark side wrote (verify_partition.cc analog). The cap is
-    rules.max_block_weight with max node weight 1 (transcript actors are
-    unweighted): floor((1+eps) * ceil(W/k)) — int() truncation == floor for
-    positive doubles, and both engines evaluate the same IEEE multiply."""
+    snapshot the Spark side wrote (verify_partition.cc analog). Node weights
+    are the graph constructor's (GraphFrame.from_edge_pairs gives every
+    transcript actor weight 1); W = sum(weight) and the cap is
+    rules.max_block_weight from W and the max node weight:
+    floor((1+eps) * ceil(W/k)), raised to ceil(W/k) + max node weight when
+    that exceeds 1 — int() truncation == floor for positive doubles, and
+    both engines evaluate the same IEEE multiply."""
     snap = _partition_snapshot_path(
         os.path.basename(
             os.path.normpath(
@@ -6366,14 +6381,21 @@ part AS MATERIALIZED (SELECT id, block FROM read_parquet('{snap}/*.parquet')),
 pcut AS (
   SELECT CAST(sum(CASE WHEN ps.block <> pd.block THEN e.weight ELSE 0 END) // 2 AS BIGINT) AS cut
   FROM edges e JOIN part ps ON e.src = ps.id JOIN part pd ON e.dst = pd.id),
+wnodes AS (SELECT id, CAST(1 AS BIGINT) AS weight FROM nodes),
 bw AS (
   SELECT CAST(max(w) AS BIGINT) AS max_block_weight, CAST(count(*) AS BIGINT) AS n_blocks
-  FROM (SELECT p.block, count(*) AS w FROM nodes n JOIN part p ON n.id = p.id GROUP BY p.block)),
-tw AS (SELECT CAST(count(*) AS BIGINT) AS total_weight FROM nodes)
+  FROM (SELECT p.block, sum(n.weight) AS w FROM wnodes n JOIN part p ON n.id = p.id GROUP BY p.block)),
+tw AS (
+  SELECT CAST(sum(weight) AS BIGINT) AS total_weight, CAST(max(weight) AS BIGINT) AS max_nw,
+         CAST(ceil(sum(weight) / {PV_K}.0) AS BIGINT) AS perfect
+  FROM wnodes)
 SELECT CAST({PV_K} AS BIGINT) AS k, tw.total_weight, pcut.cut, bw.max_block_weight,
        bw.n_blocks,
        bw.max_block_weight
-         <= CAST(floor({1 + PV_EPS!r} * CAST(ceil(tw.total_weight / {PV_K}.0) AS BIGINT)) AS BIGINT)
+         <= CASE WHEN tw.max_nw > 1
+                 THEN greatest(CAST(floor({1 + PV_EPS!r} * tw.perfect) AS BIGINT),
+                               tw.perfect + tw.max_nw)
+                 ELSE CAST(floor({1 + PV_EPS!r} * tw.perfect) AS BIGINT) END
          AS feasible
 FROM pcut, bw, tw"""
 

@@ -1,10 +1,13 @@
-"""Driver-side initial partitioning of the coarsest graph (SURVEY.md §2.10).
+"""Driver-side partitioning of driver-sized graphs (SURVEY.md §2.10).
 
-The deep-multilevel pipeline coarsens until n <= ~2*contraction_limit, then
-the coarsest graph is the ONLY thing collected to the driver (the Spark
-analog of the reference running initial partitioning on the coarsest graph,
-partitioning_scheme/parallel_recursive_bisection.cc:73-123). Everything here
-is plain numpy/heapq on CSR arrays, seeded and deterministic:
+The partitioner runs Spark coarsening levels only while a level is above
+its in-memory budget (``Partitioner.IN_MEMORY_HALF_EDGES``). The level it
+stops at, which is the whole input graph when that fits, is collected to the
+driver and partitioned here (the Spark analog of the reference running
+initial partitioning in shared memory,
+partitioning_scheme/parallel_recursive_bisection.cc:73-123). The same
+kernels also run inside every ``extend_partition`` task. Everything here is
+numpy plus plain-list CSR loops with heapq, seeded and deterministic:
 
 - bipartitioner portfolio: random (random_bipartitioner.h:20-29), BFS growers
   with block-selection strategies (bfs_bipartitioner.h:84-164), greedy graph
@@ -15,13 +18,17 @@ is plain numpy/heapq on CSR arrays, seeded and deterministic:
   (pool_bipartitioner.h:120-220)
 - recursive bisection to k with adaptive epsilon per level (helper.cc:87-176,
   context.cc:384-393) and ceil/floor k splitting (utility/math.h:51)
+- a greedy k-way repair (empty blocks, overloads) for a result that no
+  Spark level will balance
 """
 
 from __future__ import annotations
 
 import heapq
 import math
+from collections import deque
 from dataclasses import dataclass
+from functools import cached_property
 
 import numpy as np
 
@@ -45,6 +52,16 @@ class SmallGraph:
     def total_weight(self) -> int:
         return int(self.nweights.sum())
 
+    @cached_property
+    def csr(self) -> tuple[list[int], list[int], list[int], list[int]]:
+        """(indptr, indices, eweights, nweights) as Python lists. The
+        sequential kernels below touch one element at a time, and list
+        indexing is several times cheaper than a numpy scalar access."""
+        return (
+            self.indptr.tolist(), self.indices.tolist(),
+            self.eweights.tolist(), self.nweights.tolist(),
+        )
+
     @staticmethod
     def from_edges(n: int, src: np.ndarray, dst: np.ndarray, w: np.ndarray, nw: np.ndarray) -> "SmallGraph":
         order = np.argsort(src, kind="stable")
@@ -54,14 +71,14 @@ class SmallGraph:
         indptr = np.cumsum(indptr)
         return SmallGraph(indptr, dst.astype(np.int64), w.astype(np.int64), nw.astype(np.int64))
 
-    def neighbors(self, u: int):
-        s, e = self.indptr[u], self.indptr[u + 1]
-        return self.indices[s:e], self.eweights[s:e]
+
+def _sources(g: SmallGraph) -> np.ndarray:
+    """Source node of every half-edge (the CSR row index)."""
+    return np.repeat(np.arange(g.n), np.diff(g.indptr))
 
 
 def cut_of(g: SmallGraph, part: np.ndarray) -> int:
-    src = np.repeat(np.arange(g.n), np.diff(g.indptr))
-    cross = part[src] != part[g.indices]
+    cross = part[_sources(g)] != part[g.indices]
     return int(g.eweights[cross].sum() // 2)
 
 
@@ -72,31 +89,34 @@ def _block_weights(g: SmallGraph, part: np.ndarray, k: int = 2) -> np.ndarray:
 def bipartition_random(g: SmallGraph, caps: tuple[float, float], rng: np.random.Generator) -> np.ndarray:
     """Random block, fall back to the other on overflow (random_bipartitioner.h:20-29).
     ``caps`` are per-side max weights (supports k1:k2 ratio splits)."""
-    part = np.zeros(g.n, dtype=np.int64)
+    nweights = g.csr[3]
+    part = [0] * g.n
     bw = [0, 0]
-    for u in rng.permutation(g.n):
+    for u in rng.permutation(g.n).tolist():
         b = int(rng.integers(0, 2))
-        if bw[b] + g.nweights[u] > caps[b]:
+        if bw[b] + nweights[u] > caps[b]:
             b = 1 - b
         part[u] = b
-        bw[b] += g.nweights[u]
-    return part
+        bw[b] += nweights[u]
+    return np.array(part, dtype=np.int64)
 
 
 def _pseudo_peripheral(g: SmallGraph, rng: np.random.Generator) -> tuple[int, int]:
     """BFS from a random node, take the farthest; repeat once
     (graph_utils.cc:317-360)."""
+    indptr, indices = g.csr[:2]
+
     def bfs_far(s):
-        dist = -np.ones(g.n, dtype=np.int64)
-        dist[s] = 0
+        seen = [False] * g.n
+        seen[s] = True
         q = [s]
         last = s
         while q:
             nq = []
             for u in q:
-                for v in g.neighbors(u)[0]:
-                    if dist[v] < 0:
-                        dist[v] = dist[u] + 1
+                for v in indices[indptr[u]:indptr[u + 1]]:
+                    if not seen[v]:
+                        seen[v] = True
                         nq.append(v)
                         last = v
             q = nq
@@ -115,13 +135,16 @@ def bipartition_bfs(
     strategy (bfs_bipartitioner.h:20-57: alternating | lighter | sequential |
     longer_queue | shorter_queue)."""
     a, b = _pseudo_peripheral(g, rng)
-    part = -np.ones(g.n, dtype=np.int64)
-    queues = [[a], [b]]
+    indptr, indices, _, nweights = g.csr
+    n = g.n
+    part = [-1] * n
+    queues = [deque([a]), deque([b])]
     bw = [0, 0]
     cur = 0
     assigned = 0
-    bounced = np.zeros(g.n, dtype=bool)  # each node may be rerouted once only
-    while assigned < g.n:
+    first_free = 0  # every node below this index is assigned
+    bounced = [False] * n  # each node may be rerouted once only
+    while assigned < n:
         if strategy == "alternating":
             cur = 1 - cur
         elif strategy == "lighter":
@@ -138,49 +161,51 @@ def bipartition_bfs(
         q = queues[cur]
         moved = False
         while q:
-            u = q.pop(0)
+            u = q.popleft()
             if part[u] >= 0:
                 continue
+            wu = nweights[u]
             if (
                 not bounced[u]
-                and bw[cur] + g.nweights[u] > caps[cur]
-                and bw[1 - cur] + g.nweights[u] <= caps[1 - cur]
+                and bw[cur] + wu > caps[cur]
+                and bw[1 - cur] + wu <= caps[1 - cur]
             ):
                 bounced[u] = True
                 queues[1 - cur].append(u)
                 continue
             part[u] = cur
-            bw[cur] += g.nweights[u]
+            bw[cur] += wu
             assigned += 1
-            q.extend(v for v in g.neighbors(u)[0] if part[v] < 0)
+            q.extend(v for v in indices[indptr[u]:indptr[u + 1]] if part[v] < 0)
             moved = True
             break
         if not moved:
-            # queue exhausted: seed from any unassigned node
-            rest = np.nonzero(part < 0)[0]
-            if len(rest) == 0:
-                break
-            queues[cur].append(int(rest[0]))
-    part[part < 0] = 0
-    return part
+            # queue exhausted: seed from the lowest unassigned node
+            while part[first_free] >= 0:
+                first_free += 1
+            queues[cur].append(first_free)
+    return np.array(part, dtype=np.int64)
 
 
 def bipartition_ggg(g: SmallGraph, caps: tuple[float, float], rng: np.random.Generator) -> np.ndarray:
     """Greedy graph growing: start all in V0, grow V1 from a random seed by
     max gain until V1 reaches its target weight
     (greedy_graph_growing_bipartitioner.cc:4-61)."""
-    part = np.zeros(g.n, dtype=np.int64)
+    indptr, indices, eweights, nweights = g.csr
     target = g.total_weight - min(caps[0], g.total_weight)  # leave V0 within cap
     seed = int(rng.integers(0, g.n))
-    gain = {}  # node -> gain of moving to V1
+    # gain of moving each node to V1 = weight to V1 - weight to V0; every
+    # node starts in V0, and each move into V1 adds 2w to its neighbors
+    live = np.zeros(g.n, dtype=np.int64)
+    np.subtract.at(live, _sources(g), g.eweights)
+    live = live.tolist()
+    gain = {}  # node -> gain it was queued with
     pq = []  # (-gain, node)
-    in_v1 = np.zeros(g.n, dtype=bool)
+    in_v1 = [False] * g.n
 
     def push(u):
-        nbrs, ws = g.neighbors(u)
-        gn = int(ws[in_v1[nbrs]].sum() - ws[~in_v1[nbrs]].sum())
-        gain[u] = gn
-        heapq.heappush(pq, (-gn, u))
+        gain[u] = live[u]
+        heapq.heappush(pq, (-live[u], u))
 
     push(seed)
     w1 = 0
@@ -189,12 +214,14 @@ def bipartition_ggg(g: SmallGraph, caps: tuple[float, float], rng: np.random.Gen
         if in_v1[u] or -ng != gain.get(u):
             continue
         in_v1[u] = True
-        part[u] = 1
-        w1 += g.nweights[u]
-        for v in g.neighbors(u)[0]:
+        w1 += nweights[u]
+        s, e = indptr[u], indptr[u + 1]
+        for j in range(s, e):
+            live[indices[j]] += 2 * eweights[j]
+        for v in indices[s:e]:
             if not in_v1[v]:
                 push(v)
-    return part
+    return np.array(in_v1, dtype=np.int64)
 
 
 def fm_refine_2way(
@@ -219,29 +246,38 @@ def fm_refine_2way(
     Mk and sample variance; stop once steps > sqrt(n) and (Mk == 0 or
     steps >= variance / Mk^2 * (alpha/2 - 0.25)) — i.e. when further
     improvement is statistically unlikely. alpha default 1.0
-    (context.h:169)."""
+    (context.h:169).
+
+    Gains are computed once per pass and updated by +-2w(e) per move
+    (initial_refiner.h:285-307); ``rng`` is accepted for call-site symmetry
+    with the bipartitioners and not drawn from."""
     assert stopping in ("simple", "adaptive")
     if not isinstance(caps, tuple):
         caps = (caps, caps)
+    indptr, indices, eweights, nweights = g.csr
+    src = _sources(g)
     beta = math.sqrt(g.n)
     factor = alpha / 2.0 - 0.25
     part = part.copy()
     for _ in range(max_iterations):
-        bw = _block_weights(g, part)
-        gains = np.zeros(g.n, dtype=np.int64)
-        src_rep = np.repeat(np.arange(g.n), np.diff(g.indptr))
-        same = part[src_rep] == part[g.indices]
-        np.add.at(gains, src_rep, np.where(same, -g.eweights, g.eweights))
+        bw = _block_weights(g, part).tolist()
+        gains_np = np.zeros(g.n, dtype=np.int64)
+        same = part[src] == part[g.indices]
+        np.add.at(gains_np, src, np.where(same, -g.eweights, g.eweights))
+        gains = gains_np.tolist()
+        p = part.tolist()
         pqs = [[], []]
         valid = [{}, {}]
         for u in range(g.n):
-            b = part[u]
-            heapq.heappush(pqs[b], (-gains[u], u))
+            b = p[u]
+            pqs[b].append((-gains[u], u))
             valid[b][u] = gains[u]
+        heapq.heapify(pqs[0])
+        heapq.heapify(pqs[1])
         moved_order: list[int] = []
         cum_gain = 0
         best_gain, best_prefix = 0, 0
-        locked = np.zeros(g.n, dtype=bool)
+        locked = [False] * g.n
         fruitless = 0
         walk = _Welford()  # gain sequence since the last accepted cut
 
@@ -261,15 +297,16 @@ def fm_refine_2way(
             if not pqs[b]:
                 b = 1 - b
             ng, u = heapq.heappop(pqs[b])
-            if locked[u] or u not in valid[b] or -ng != valid[b][u]:
+            if locked[u] or valid[b].get(u) != -ng:
                 continue
             del valid[b][u]
-            if bw[1 - b] + g.nweights[u] > caps[1 - b]:
+            wu = nweights[u]
+            if bw[1 - b] + wu > caps[1 - b]:
                 continue
             # move u
-            part[u] = 1 - b
-            bw[b] -= g.nweights[u]
-            bw[1 - b] += g.nweights[u]
+            p[u] = 1 - b
+            bw[b] -= wu
+            bw[1 - b] += wu
             locked[u] = True
             moved_order.append(u)
             cum_gain += -ng
@@ -280,21 +317,24 @@ def fm_refine_2way(
                 walk = _Welford()  # policy reset on accepted cut
             else:
                 fruitless += 1
-            # update neighbor gains by +-2w(e) (initial_refiner.h:285-307)
-            nbrs, ws = g.neighbors(u)
-            for v, w in zip(nbrs, ws):
-                if locked[v]:
-                    continue
-                delta = 2 * w if part[v] == part[u] else -2 * w
-                # recompute from scratch is simpler and n is small:
-                vn, vw = g.neighbors(v)
-                gv = int(vw[part[vn] != part[v]].sum() - vw[part[vn] == part[v]].sum())
-                vb = part[v]
-                valid[vb][v] = gv
-                heapq.heappush(pqs[vb], (-gv, v))
+            # neighbor gains (initial_refiner.h:285-307): an edge to a node
+            # still in u's old block turns cut (+2w), one to a node in u's
+            # new block turns internal (-2w). Apply every delta before
+            # queueing, so a repeated neighbor is queued at its final gain.
+            s, e = indptr[u], indptr[u + 1]
+            for j in range(s, e):
+                v = indices[j]
+                if not locked[v]:
+                    gains[v] += 2 * eweights[j] if p[v] == b else -2 * eweights[j]
+            for v in indices[s:e]:
+                if not locked[v]:
+                    vb = p[v]
+                    valid[vb][v] = gains[v]
+                    heapq.heappush(pqs[vb], (-gains[v], v))
         # rollback to best prefix (initial_refiner.h:320)
         for u in moved_order[best_prefix:]:
-            part[u] = 1 - part[u]
+            p[u] = 1 - p[u]
+        part = np.array(p, dtype=part.dtype)
         if best_gain == 0:
             break
     return part
@@ -362,15 +402,7 @@ def pool_bipartition(
     best_cut)/2)^2 (pool_bipartitioner.h:149-153)."""
     if g.n == 0:
         return np.zeros(0, dtype=np.int64)
-    k1, k2 = ratio
-    slack = int(g.nweights.max(initial=1))
-    caps = tuple(
-        max(
-            (1 + epsilon) * math.ceil(g.total_weight * ks / (k1 + k2)),
-            math.ceil(g.total_weight * ks / (k1 + k2)) + slack,
-        )
-        for ks in (k1, k2)
-    )
+    caps = bipartition_caps(g, epsilon, ratio)
     rng = np.random.default_rng(seed)
     best = None  # ((infeasible, cut), part)
     stats = [_Welford() for _ in _PORTFOLIO]
@@ -455,7 +487,7 @@ def recursive_bisect(
             continue
         remap = -np.ones(g.n, dtype=np.int64)
         remap[members] = np.arange(len(members))
-        src = np.repeat(np.arange(g.n), np.diff(g.indptr))
+        src = _sources(g)
         mask = (remap[src] >= 0) & (remap[g.indices] >= 0)
         sub = SmallGraph.from_edges(
             len(members),
@@ -500,21 +532,22 @@ def lp_cluster_seq(
     pick_cluster_from_rating_map initial_coarsener.cc:71-90), locking the
     chosen leader. Leader values are fixpoints: a stored leader is its own
     leader and locked, so chains never exceed depth one."""
-    leader = np.arange(g.n, dtype=np.int64)
-    cweight = g.nweights.astype(np.int64).copy()
-    locked = np.zeros(g.n, dtype=bool)
+    indptr, indices, eweights, nweights = g.csr
+    leader = list(range(g.n))
+    cweight = list(nweights)
+    locked = [False] * g.n
     moves = 0
-    for u in rng.permutation(g.n):
+    for u in rng.permutation(g.n).tolist():
         if locked[u]:
             continue
-        nbrs, ws = g.neighbors(u)
-        if len(nbrs) == 0:
+        s, e = indptr[u], indptr[u + 1]
+        if s == e:
             continue
         ratings: dict[int, int] = {}
-        for v, w in zip(nbrs, ws):
-            c = int(leader[v])
-            ratings[c] = ratings.get(c, 0) + int(w)
-        uw = int(g.nweights[u])
+        for j in range(s, e):
+            c = leader[indices[j]]
+            ratings[c] = ratings.get(c, 0) + eweights[j]
+        uw = nweights[u]
         best, best_gain = u, 0
         for c, gain in ratings.items():
             if c == u:
@@ -527,7 +560,7 @@ def lp_cluster_seq(
             locked[best] = True
             cweight[best] += uw
             moves += 1
-    return leader, moves
+    return np.array(leader, dtype=np.int64), moves
 
 
 def contract_clustering(g: SmallGraph, leader: np.ndarray) -> tuple[SmallGraph, np.ndarray]:
@@ -538,8 +571,7 @@ def contract_clustering(g: SmallGraph, leader: np.ndarray) -> tuple[SmallGraph, 
     leaders, mapping = np.unique(leader, return_inverse=True)
     c_n = len(leaders)
     c_nw = np.bincount(mapping, weights=g.nweights, minlength=c_n).astype(np.int64)
-    src_rep = np.repeat(np.arange(g.n), np.diff(g.indptr))
-    c_src, c_dst = mapping[src_rep], mapping[g.indices]
+    c_src, c_dst = mapping[_sources(g)], mapping[g.indices]
     keep = c_src != c_dst  # drop intra-cluster edges
     key = c_src[keep] * c_n + c_dst[keep]
     uniq, inv = np.unique(key, return_inverse=True)
@@ -581,27 +613,16 @@ def multilevel_bipartition(
         cur = cg
     part = pool_bipartition(cur, epsilon, seed=seed, repetitions=repetitions, ratio=ratio)
 
-    k1, k2 = ratio
-    slack = int(g.nweights.max(initial=1))
-    caps = tuple(
-        max(
-            (1 + epsilon) * math.ceil(g.total_weight * ks / (k1 + k2)),
-            math.ceil(g.total_weight * ks / (k1 + k2)) + slack,
-        )
-        for ks in (k1, k2)
-    )
+    caps = bipartition_caps(g, epsilon, ratio)
     for fine, mapping in reversed(hierarchy):
         part = part[mapping]
         part = fm_refine_2way(fine, part, caps, rng=rng)
 
     if hierarchy:
-        bw = _block_weights(g, part)
-        infeasible = int(max(0, bw[0] - caps[0]) + max(0, bw[1] - caps[1]))
-        if infeasible > 0:
+        score = bipartition_score(g, part, caps)
+        if score[0] > 0:
             flat = pool_bipartition(g, epsilon, seed=seed, repetitions=repetitions, ratio=ratio)
-            fbw = _block_weights(g, flat)
-            f_inf = int(max(0, fbw[0] - caps[0]) + max(0, fbw[1] - caps[1]))
-            if (f_inf, cut_of(g, flat)) < (infeasible, cut_of(g, part)):
+            if bipartition_score(g, flat, caps) < score:
                 return flat
     return part
 
@@ -890,3 +911,45 @@ def best_of_bisections(
         if best is None or cand < best[0]:
             best = (cand, labels)
     return best[1]
+
+
+def repair_kway(g: SmallGraph, labels: np.ndarray, caps: np.ndarray) -> np.ndarray:
+    """Greedy repair of a k-way partition on the driver: give every empty
+    block one node (when n >= k), then move nodes out of overloaded blocks
+    until every block is within ``caps``. Each move takes the source-block
+    node with the best cut gain that fits the target, and the target is the
+    block with the most free capacity. Under the uniform cap
+    max((1+eps)*ceil(W/k), ceil(W/k) + max node weight) the lightest block
+    always has room for any node, so every overload gets repaired. A
+    feasible partition without empty blocks comes back unchanged."""
+    k = len(caps)
+    part = labels.copy()
+    nw = g.nweights
+    bw = np.bincount(part, weights=nw, minlength=k).astype(np.int64)
+    count = np.bincount(part, minlength=k)
+    src = _sources(g)
+
+    def move_best(frm: int, to: int) -> bool:
+        into = np.bincount(src, weights=g.eweights * (part[g.indices] == to), minlength=g.n)
+        out = np.bincount(src, weights=g.eweights * (part[g.indices] == frm), minlength=g.n)
+        gain = np.where((part == frm) & (nw <= caps[to] - bw[to]), into - out, -np.inf)
+        u = int(np.argmax(gain))
+        if gain[u] == -np.inf:
+            return False
+        part[u] = to
+        bw[frm] -= nw[u]
+        bw[to] += nw[u]
+        count[frm] -= 1
+        count[to] += 1
+        return True
+
+    if g.n >= k:
+        for b in np.nonzero(count == 0)[0].tolist():
+            move_best(int(np.argmax(count)), b)  # pigeonhole: holds >= 2 nodes
+    while k > 1 and (bw > caps).any():
+        frm = int(np.argmax(bw - caps))
+        free = caps - bw
+        free[frm] = np.iinfo(np.int64).min
+        if not move_best(frm, int(np.argmax(free))):
+            break
+    return part

@@ -1,17 +1,22 @@
 """Multilevel graph partitioner — the flagship pipeline (SURVEY.md §3.1).
 
 Spark-native re-expression of the reference's coarsen -> initial-partition ->
-uncoarsen+refine scheme (partitioning_scheme/parallel_recursive_bisection.cc):
+uncoarsen+refine scheme (partitioning_scheme/parallel_recursive_bisection.cc),
+with a hybrid in-memory tail in the style of HEP (PAPERS.md): only the levels
+above a driver budget (``Partitioner.IN_MEMORY_HALF_EDGES``) run in Spark.
 
-coarsen   while n > 2*C and shrink > 5% (context.h:148-150):
+coarsen   while n > 2*C, shrink > 5% (context.h:148-150) and the level has
+             more half-edges than the in-memory budget:
              size-constrained LP clustering (I2, cap = F5 rule)
              + distributed contraction (A1); (mapping, level) checkpointed
-initial   coarsest graph (n <= ~2C) collected to the driver — the ONLY
-             collect() — and partitioned by the numpy portfolio + recursive
-             bisection (plans/initial.py)
-uncoarsen for each level in reverse: project (J2), LP-refine with HARD block
-             caps (I3, gain-ordered capacity admission), then balancer (I4)
-             if infeasible
+initial   the level the loop stopped at is collected to the driver once
+             (Arrow) and partitioned by the numpy portfolio + recursive
+             bisection with sequential multilevel FM (plans/initial.py):
+             to k when it is the input graph itself (no Spark level ran),
+             to the deep schedule's k' otherwise; labels go back via Arrow
+uncoarsen for each Spark level in reverse: project (J2), LP-refine with HARD
+             block caps (I3, gain-ordered capacity admission), then
+             balancer (I4) if infeasible
 
 Per-level metrics (edge cut, imbalance, n, m) are recorded in the lineage
 list; the facade returns an (id, block) DataFrame.
@@ -40,7 +45,9 @@ from kaminpar_spark.operators.labelprop import (
 from kaminpar_spark.plans.initial import (
     SmallGraph,
     best_of_bisections,
+    cut_of,
     recursive_bisect,
+    repair_kway,
 )
 from kaminpar_spark.plans.lineage import truncate
 
@@ -209,7 +216,13 @@ class Partitioner:
           sequential chain per bisection); the coarsest graph is
           driver-sized, so the default 2 costs at most ~2x the sequential
           initial partition and buys back quality variance on unlucky
-          clusterings."""
+          clusterings.
+
+        ``coarsener``, ``max_num_neighbors``, ``large_degree_threshold`` and
+        ``cluster_weight_*`` shape only the Spark levels, which run while a
+        level is above the in-memory budget (``IN_MEMORY_HALF_EDGES``); a
+        graph within the budget is partitioned entirely on the driver by the
+        sequential multilevel bisection of plans/initial.py."""
         self.graph = graph
         self.spark = spark or SparkSession.getActiveSession()
         self.contraction_limit = contraction_limit
@@ -251,18 +264,20 @@ class Partitioner:
     # ------------------------------------------------------------- pipeline
     def partition(self, k: int, epsilon: float = 0.03) -> PartitionResult:
         g = self.graph
-        total_w = g.total_node_weight()
-        max_node_w = g.max_node_weight()
+        row = g.nodes.agg(
+            F.count("*").alias("n"), F.sum("weight").alias("w"), F.max("weight").alias("mx")
+        ).first()
+        n, total_w, max_node_w = row["n"], row["w"] or 0, row["mx"] or 0
+        m = g.num_half_edges()
         cap = rules.max_block_weight(total_w, k, epsilon, max_node_w)
         levels: list[dict] = []
 
-        # ---- coarsen ----
+        # ---- coarsen (Spark, above the in-memory budget only) ----
         hierarchy: list[DataFrame] = []  # mappings fine->coarse per level
         level_graphs: list[GraphFrame] = []  # graph each mapping projects back to
         level_ns: list[int] = []  # n of the fine graph per level
-        n = g.num_nodes()
         t0 = time.time()
-        while n > 2 * self.contraction_limit:
+        while n > 2 * self.contraction_limit and m > self.IN_MEMORY_HALF_EDGES:
             cluster_cap = self._cluster_cap(epsilon, total_w, n, k)
             # rating view: neighbor-scan cap bounds per-node work during LP
             # (the state/metrics still see the full graph)
@@ -330,12 +345,13 @@ class Partitioner:
             res = ContractionResult(coarse=coarse, mapping=res.mapping)
             mapping = truncate(res.mapping)
             n_new = res.coarse.num_nodes()
+            m_new = res.coarse.num_half_edges()
             levels.append(
                 {
                     "stage": "coarsen",
                     "level": len(hierarchy),
                     "n": n_new,
-                    "m": res.coarse.num_half_edges(),
+                    "m": m_new,
                     "wall_sec": round(time.time() - t0, 3),
                 }
             )
@@ -346,41 +362,60 @@ class Partitioner:
             # shrink below convergence_threshold -> stop (context.h:148-150)
             stalled = n_new >= (1.0 - self.convergence_threshold) * n
             g = res.coarse
-            n = n_new
+            n, m = n_new, m_new
             if stalled:
                 break
 
-        # ---- initial partition (driver-side) ----
-        # deep scheme: bisect the coarsest graph only to k0 = deep_k_prime
-        # (usually 2); the remaining blocks are created during uncoarsening
-        # (compute_k_for_n, helper.cc:205-209). rb scheme: full k here.
+        # ---- initial partition (driver-side, in memory) ----
+        # The input graph itself (no Spark level ran) is bisected straight
+        # to k. A coarsened level follows the deep schedule: bisect only to
+        # k0 = deep_k_prime (usually 2) and create the remaining blocks
+        # during uncoarsening (compute_k_for_n, helper.cc:205-209). rb
+        # scheme: full k here.
         k0 = (
             rules.deep_k_prime(n, self.contraction_limit, k)
-            if self.scheme == "deep"
+            if self.scheme == "deep" and hierarchy
             else k
         )
-        sg, ids = self._collect_small(g)
+        sg, ids = self._collect_small(g, n, m)
         labels = best_of_bisections(
             sg, k0, epsilon,
             seeds=[self.seed + 7919 * r for r in range(self.ip_replications)],
             k_final=k, total_weight_root=total_w, final_k=k,
             replication_threads=self.ip_replication_threads,
         )
-        part = self.spark.createDataFrame(
-            [(int(i), int(b)) for i, b in zip(ids, labels)], "id long, block int"
-        )
         cur_k = k0
         # per-block final-block bookkeeping (graph_utils.cc:43-60)
         final_ks = rules.fill_final_k(k0, k)
+        if not hierarchy:
+            # the collected graph IS the input graph: no Spark level follows
+            # to balance it, so repair overloads and empty blocks here
+            labels = repair_kway(sg, labels, np.full(k, cap, dtype=np.int64))
+        # Arrow-batched push-back, not a Python row list
+        part = self.spark.createDataFrame(
+            pd.DataFrame({"id": ids, "block": labels.astype(np.int32)}),
+            "id long, block int",
+        )
+        bw = np.bincount(labels, weights=sg.nweights, minlength=k0)
+        cut = cut_of(sg, labels)
+        imbalance = float(bw.max()) / M.perfect_block_weight(total_w, k0) - 1.0
         levels.append(
             {
                 "stage": "initial",
                 "n": int(sg.n),
+                "m": len(sg.indices),
                 "k": cur_k,
-                "cut": int(_np_cut(sg, labels)),
+                "cut": cut,
+                "imbalance": round(imbalance, 6),
                 "wall_sec": round(time.time() - t0, 3),
             }
         )
+        if not hierarchy:
+            # the numpy quality of the input graph is the partition's quality
+            return PartitionResult(
+                partition=part, k=k, epsilon=epsilon, cut=cut,
+                imbalance=imbalance, feasible=bool(bw.max() <= cap), levels=levels,
+            )
 
         # per-block caps follow final_k shares (context.cc:114-130)
         def caps_for(fks: list[int]) -> list[int]:
@@ -449,9 +484,24 @@ class Partitioner:
     # (src, dst, weight) int64 is ~1.5 GB via Arrow, safe under the driver's
     # default heap and far above any non-degenerate coarsest graph.
     MAX_COLLECT_HALF_EDGES = 64_000_000
+    # In-memory budget of the hybrid tail: coarsening runs in Spark only
+    # while a level has more half-edges than this; the level it stops at is
+    # partitioned on the driver (plans/initial.py). Set at the measured
+    # crossover on a 4-core host, sf0.1 transcript graph, C=400, k=16, 3
+    # seeds: the driver tail costs ~0.21 ms per half-edge (109 s on the
+    # whole 472,598-half-edge graph, 49 s on its 238,944-half-edge first
+    # coarse level) and one Spark level (coarsen + uncoarsen) 22-36 s, so
+    # the two break even near 240k. End to end that run took 85 s with this
+    # budget (one Spark level), 110 s all in memory, 189 s all in Spark.
+    IN_MEMORY_HALF_EDGES = 250_000
 
-    def _collect_small(self, g: GraphFrame) -> tuple[SmallGraph, np.ndarray]:
-        n = g.num_nodes()
+    def _collect_small(
+        self, g: GraphFrame, n: int | None = None, m: int | None = None
+    ) -> tuple[SmallGraph, np.ndarray]:
+        """Collect ``g`` to the driver as (CSR graph, sorted node ids).
+        ``n``/``m`` are the node and half-edge counts if the caller already
+        has them; otherwise they are counted here."""
+        n = g.num_nodes() if n is None else n
         if n > self.MAX_COLLECT_NODES:
             raise RuntimeError(
                 f"coarsest graph has {n:,} nodes (> {self.MAX_COLLECT_NODES:,}); "
@@ -459,7 +509,7 @@ class Partitioner:
                 "lp_iters / cluster caps or the collect ceiling instead of "
                 "collecting a distributed graph to the driver"
             )
-        m = g.num_half_edges()
+        m = g.num_half_edges() if m is None else m
         if m > self.MAX_COLLECT_HALF_EDGES:
             raise RuntimeError(
                 f"coarsest graph has {m:,} half-edges "
@@ -468,9 +518,10 @@ class Partitioner:
                 "ceiling instead of collecting a distributed graph to the driver"
             )
         # Arrow-batched transfers (toPandas), not Python Row lists
-        nodes = g.nodes.select("id", "weight").orderBy("id").toPandas()
+        nodes = g.nodes.select("id", "weight").toPandas()
         ids = nodes["id"].to_numpy(dtype=np.int64)
-        nw = nodes["weight"].to_numpy(dtype=np.int64)
+        order = np.argsort(ids)  # sorted on the driver: no Spark sort job
+        ids, nw = ids[order], nodes["weight"].to_numpy(dtype=np.int64)[order]
         edges = g.edges.select("src", "dst", "weight").toPandas()
         # ids are sorted ascending: searchsorted is the vectorized remap
         src = np.searchsorted(ids, edges["src"].to_numpy(dtype=np.int64))
@@ -499,8 +550,3 @@ class Partitioner:
         refined = state.select("id", F.col("label").cast("int").alias("block"))
         return balance(g, refined, cap_list, max_rounds=5, k=k)
 
-
-def _np_cut(sg: SmallGraph, labels: np.ndarray) -> int:
-    from kaminpar_spark.plans.initial import cut_of
-
-    return cut_of(sg, labels)

@@ -65,9 +65,9 @@ def test_deep_scheme_non_power_of_two_k(spark, k):
     final_k/split_integral schedule and produce exactly k nonempty-capable
     blocks, with cut no worse than a random balanced baseline."""
     g, _, _ = fixtures.erdos_renyi(spark, n=1200, p=0.008, hub_overlay=2)
-    res = Partitioner(
-        g, spark, contraction_limit=150, lp_iters=3, refine_iters=2
-    ).partition(k, epsilon=0.05)
+    p = Partitioner(g, spark, contraction_limit=150, lp_iters=3, refine_iters=2)
+    p.IN_MEMORY_HALF_EDGES = 0  # the extension schedule runs on Spark levels
+    res = p.partition(k, epsilon=0.05)
     assert res.feasible, f"infeasible at k={k}: imbalance={res.imbalance}"
     blocks = {r["block"] for r in res.partition.select("block").distinct().collect()}
     assert blocks == set(range(k))
@@ -163,8 +163,11 @@ def test_deep_scheme_quality_vs_rb(spark):
     to round-1 rb-at-coarsest on cut at equal feasibility (VERDICT item 5)."""
     g, _, _ = fixtures.erdos_renyi(spark, n=1500, p=0.006, hub_overlay=3)
     k = 8
-    res_deep = Partitioner(g, spark, contraction_limit=150, scheme="deep").partition(k)
-    res_rb = Partitioner(g, spark, contraction_limit=150, scheme="rb").partition(k)
+    deep = Partitioner(g, spark, contraction_limit=150, scheme="deep")
+    rb = Partitioner(g, spark, contraction_limit=150, scheme="rb")
+    # the schemes differ only on Spark levels: keep them
+    deep.IN_MEMORY_HALF_EDGES = rb.IN_MEMORY_HALF_EDGES = 0
+    res_deep, res_rb = deep.partition(k), rb.partition(k)
     assert res_deep.feasible
     n_blocks = res_deep.partition.select("block").distinct().count()
     assert n_blocks == k

@@ -41,3 +41,18 @@ def test_every_query_has_oracle_and_unique_callable():
         by_fn.setdefault(fn, []).append(k)
     shared = {fn.__name__: ks for fn, ks in by_fn.items() if len(ks) > 1}
     assert shared == {}, f"multiple query keys share one callable: {shared}"
+
+
+def test_partition_verify_oracle_reads_only_this_runs_snapshot(monkeypatch, tmp_path):
+    """The oracle resolves the snapshot of the sf under test written by the
+    Spark side of the SAME process (run nonce in the path): a snapshot left
+    by another run, under the old shared name or another nonce, is never
+    the one it reads."""
+    import __spark_entry__ as e
+
+    monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF", str(tmp_path / "sf0.5"))
+    sql = e._partition_verify_sql()
+    mine = e._partition_snapshot_path("sf0.5")
+    assert e._PV_RUN_NONCE in mine and "sf0.5" in mine
+    assert f"read_parquet('{mine}/*.parquet')" in sql
+    assert sql.count("read_parquet(") == 1

@@ -204,3 +204,15 @@ def test_recursive_bisect_multilevel_ring():
     bw = np.bincount(labels, weights=g.nweights, minlength=4)
     assert bw.max() <= (1 + 0.03) * 16 + 1
     assert 4 <= cut_of(g, labels) <= 8
+
+
+def test_repair_kway_fills_empty_blocks_and_overloads():
+    from kaminpar_spark.plans.initial import repair_kway
+
+    g = ring(12)
+    caps = np.full(3, 4)
+    out = repair_kway(g, np.zeros(12, dtype=np.int64), caps)  # all in block 0
+    bw = np.bincount(out, weights=g.nweights, minlength=3)
+    assert bw.max() <= 4 and (bw > 0).all()
+    feasible = np.repeat([0, 1, 2], 4)
+    assert (repair_kway(g, feasible, caps) == feasible).all()  # left unchanged

@@ -82,9 +82,9 @@ def test_partitioner_hem_coarsener(spark):
     from kaminpar_spark.plans.partitioner import Partitioner
 
     g, _, _ = fixtures.erdos_renyi(spark, n=400, p=0.02, seed=3)
-    res = Partitioner(
-        g, spark=spark, contraction_limit=50, coarsener="hem"
-    ).partition(k=4, epsilon=0.03)
+    p = Partitioner(g, spark=spark, contraction_limit=50, coarsener="hem")
+    p.IN_MEMORY_HALF_EDGES = 0  # the coarsener shapes only the Spark levels
+    res = p.partition(k=4, epsilon=0.03)
     blocks = res.partition
     assert blocks.count() == g.num_nodes()
     assert blocks.select("block").distinct().count() == 4

@@ -1,17 +1,20 @@
 """Multilevel partitioner acceptance (FIXTURES.md §4): feasibility, quality
-vs random balanced baseline, multilevel path exercised via a small
-contraction limit."""
+vs random balanced baseline. Graphs within ``IN_MEMORY_HALF_EDGES`` are
+partitioned on the driver; tests of the distributed coarsening path set the
+budget to 0 on the instance and use a small contraction limit."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
+from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from kaminpar_spark import fixtures
 from kaminpar_spark.functions import rules
 from kaminpar_spark.operators import metrics as M
 from kaminpar_spark.plans.partitioner import Partitioner
+from kaminpar_spark.verify import verify_partition
 
 
 def random_balanced_cut(spark, g, k, seed=0):
@@ -40,6 +43,7 @@ def test_partition_multilevel(spark):
     still produce a feasible partition with sane cut."""
     g, _, _ = fixtures.erdos_renyi(spark, n=600, p=0.015, seed=7, hub_overlay=2)
     p = Partitioner(g, spark, contraction_limit=100, lp_iters=3, refine_iters=2)
+    p.IN_MEMORY_HALF_EDGES = 0  # keep the Spark coarsening levels
     res = p.partition(4, epsilon=0.05)
     coarsen_levels = [l for l in res.levels if l["stage"] == "coarsen"]
     assert len(coarsen_levels) >= 1
@@ -86,6 +90,7 @@ def test_refinement_reduces_cut_vs_projection(spark):
     balancer leaves no overload."""
     g, _, _ = fixtures.erdos_renyi(spark, n=500, p=0.012, seed=3, hub_overlay=2)
     p = Partitioner(g, spark, contraction_limit=100, lp_iters=2, refine_iters=2)
+    p.IN_MEMORY_HALF_EDGES = 0  # keep the Spark coarsening levels
     res = p.partition(2, epsilon=0.03)
     q = M.quality(g, res.partition, 2, 0.03)
     assert q.total_overload == 0
@@ -110,6 +115,7 @@ def test_partition_reference_knobs(spark):
         cluster_weight_multiplier=0.5,
         convergence_threshold=0.03,
     )
+    p.IN_MEMORY_HALF_EDGES = 0  # the knobs shape only the Spark levels
     res = p.partition(4, epsilon=0.05)
     assert res.feasible
     assert res.partition.count() == 500
@@ -121,8 +127,73 @@ def test_partition_uncapped_clusters_complete(spark):
     """cluster_weight_limit='zero' (no cap, reference ZERO) must still
     coarsen and partition."""
     g, _, _ = fixtures.erdos_renyi(spark, n=400, p=0.02, seed=9)
-    res = Partitioner(
+    p = Partitioner(
         g, spark, contraction_limit=80, lp_iters=3, refine_iters=1,
         cluster_weight_limit="zero",
-    ).partition(2, epsilon=0.1)
+    )
+    p.IN_MEMORY_HALF_EDGES = 0  # keep the Spark coarsening levels
+    res = p.partition(2, epsilon=0.1)
     assert res.partition.count() == 400
+
+
+@st.composite
+def weighted_graph(draw):
+    """(n, undirected weighted edges, node weights, k) with n <= 30."""
+    n = draw(st.integers(min_value=1, max_value=30))
+    raw = draw(
+        st.lists(
+            st.tuples(st.integers(0, n - 1), st.integers(0, n - 1), st.integers(1, 9)),
+            max_size=3 * n,
+        )
+    )
+    edges = sorted({(min(u, v), max(u, v)): w for u, v, w in raw if u != v}.items())
+    nw = draw(st.lists(st.integers(1, 12), min_size=n, max_size=n))
+    k = draw(st.integers(min_value=2, max_value=8))
+    return n, [(u, v, w) for (u, v), w in edges], nw, k
+
+
+@settings(
+    max_examples=6,
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(case=weighted_graph())
+def test_in_memory_tail_complete_nonempty_within_caps(spark, case):
+    """The in-memory tail (no Spark level: the whole graph is within the
+    budget) assigns every node exactly once, fills all k blocks when n >= k
+    and keeps every block within its max_block_weight_final_k cap."""
+    n, edges, nw, k = case
+    eps = 0.03
+    g = fixtures._graph(spark, edges, node_weights=nw)
+    res = Partitioner(g, spark).partition(k, epsilon=eps)
+    assert not [lv for lv in res.levels if lv["stage"] == "coarsen"]
+    rows = res.partition.collect()
+    assert sorted(r["id"] for r in rows) == list(range(n))
+    labels = np.zeros(n, dtype=np.int64)
+    for r in rows:
+        labels[r["id"]] = r["block"]
+    assert labels.min() >= 0 and labels.max() < k
+    if n >= k:
+        assert len(set(labels.tolist())) == k
+    cap = rules.max_block_weight_final_k(sum(nw), k, 1, eps, max(nw))
+    bw = np.bincount(labels, weights=nw, minlength=k)
+    assert bw.max() <= cap, (bw.tolist(), cap)
+    assert res.feasible
+
+
+def test_in_memory_and_spark_paths_both_verify(spark):
+    """One fixture graph through both paths: the in-memory tail (within the
+    budget) and the Spark coarsening levels (budget 0). Both results pass
+    verify_partition: complete, k blocks, feasible, verified cut == reported."""
+    g, _, _ = fixtures.erdos_renyi(spark, n=200, p=0.04, seed=5, hub_overlay=2)
+    k, eps = 4, 0.05
+    knobs = dict(contraction_limit=80, lp_iters=2, refine_iters=1, ip_replications=1)
+    mem, dist = Partitioner(g, spark, **knobs), Partitioner(g, spark, **knobs)
+    dist.IN_MEMORY_HALF_EDGES = 0
+    for p, spark_levels in ((mem, False), (dist, True)):
+        res = p.partition(k, epsilon=eps)
+        assert any(lv["stage"] == "coarsen" for lv in res.levels) == spark_levels
+        v = verify_partition(g, res.partition, k, eps)
+        assert v.complete and v.k == k and v.feasible
+        assert v.cut == res.cut
