@@ -8105,20 +8105,22 @@ def _semdedup_sql() -> str:
     pairwise stage mirrors the Spark self-join with the same round-4 cosine
     threshold device already proven by embedding_near_dups; keep = no
     duplicate partner of smaller id."""
+    import duckdb as _dd
+
     from kaminpar_spark.functions.similarity import semdedup_auto_k
 
-    n = 500  # gate-corpus fallback if the parquet is unreadable here
-    try:
-        import duckdb as _dd
-
-        _f = os.path.join(
-            os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01"),
-            "embeddings.parquet",
-        )
-        if os.path.exists(_f):
-            n = _dd.sql(f"SELECT count(*) FROM read_parquet('{_f}')").fetchone()[0]
-    except Exception:
-        pass
+    # the oracle dict is built for every query, so a missing gate corpus
+    # falls back to its n=500; a corpus that exists but cannot be read raises
+    n = 500
+    _f = os.path.join(
+        os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01"),
+        "embeddings.parquet",
+    )
+    if os.path.exists(_f):
+        # a private connection: a failed read must not leave the process-wide
+        # default connection in an aborted transaction for later callers
+        with _dd.connect() as con:
+            n = con.sql(f"SELECT count(*) FROM read_parquet('{_f}')").fetchone()[0]
 
     return f"""
 WITH cells AS MATERIALIZED ({_kmeans_sql(k=semdedup_auto_k(n))}),

@@ -93,10 +93,6 @@ def main(argv=None):
                     dest="cluster_weight_limit")
     ap.add_argument("--c-cluster-weight-multiplier", type=float, default=1.0,
                     dest="cluster_weight_multiplier")
-    ap.add_argument("--i-r-replication-threads", type=int, default=2,
-                    dest="ip_replication_threads",
-                    help="thread budget for the E9 split-and-join replica tree "
-                         "inside each initial bisection (1 disables the tree)")
     ap.add_argument("--degree-weight", action="store_true",
                     help="use node degree as node weight, ignore input weights")
     args = ap.parse_args(argv)
@@ -207,7 +203,6 @@ def main(argv=None):
             convergence_threshold=args.convergence_threshold,
             cluster_weight_limit=args.cluster_weight_limit,
             cluster_weight_multiplier=args.cluster_weight_multiplier,
-            ip_replication_threads=args.ip_replication_threads,
         ).partition(args.k, args.epsilon)
         if args.save:
             res.partition.write.mode("overwrite").parquet(args.save)

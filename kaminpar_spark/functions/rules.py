@@ -138,9 +138,7 @@ def deep_k_prime(n: int, contraction_limit: int, k_final: int) -> int:
     """Deep-multilevel block schedule k' = clamp(2^ceil_log2(n // C), 2,
     k_final) with INTEGER (floor) division, matching compute_k_for_n exactly
     (partitioning_scheme/helper.cc:204-209): n < 2C is the special case
-    (log would be non-positive) and returns 2. Note the reference's
-    compute_num_copies (helper.cc:219) deliberately differs — it divides in
-    floating point (``log2(1.0 * n / C)``); see plans/initial.py."""
+    (log would be non-positive) and returns 2."""
     if n < 2 * contraction_limit:
         return 2
     return max(2, min(k_final, 2 ** ceil_log2(n // contraction_limit)))

@@ -9,11 +9,23 @@ BSP re-expression per round (deterministic, no CAS):
 1. compute per-node best external target among blocks with residual capacity
    (the J1 gather + argmax, excluding infeasible targets like
    parallel_balancer.cc:219),
-2. rank candidates inside each overloaded source block by relative gain
-   (W4 substitute: Window + row_number),
-3. admit the top slice whose cumulative weight <= the block's overload, AND
-   (per target) whose cumulative weight <= the target's residual capacity,
-4. repeat until total_overload == 0 or max_rounds.
+2. quantize each candidate's relative gain into a bounded gain bucket
+   (``_gain_bucket``: floor clamped to +-BAL_GAIN_BUCKETS, plus one bottom
+   bucket for the fallback movers) — the W4 priority order, kept per group
+   instead of per mover,
+3. admit per overloaded source block against its overload, then per target
+   against its residual capacity (``_grouped_admission``): sum weight per
+   (key, bucket), take a cumulative sum over that small table best bucket
+   first, admit every bucket that fits the remaining budget whole, and admit
+   the single boundary bucket's movers whose id-hash fraction falls below
+   remaining/bucket weight. No window ever sorts individual movers,
+4. repeat until total_overload == 0 or max_rounds (``balance``).
+
+Contract: the boundary bucket admits by hash fraction, so one
+``balance_round`` matches each budget only in expectation. It may move more
+or less weight than a source's overload, and it may push a feasible target
+past its residual capacity; ``balance`` therefore re-measures the block weights and repeats rounds
+until no block is over its cap (or ``max_rounds`` runs out).
 
 Fallback targets: nodes with no feasible adjacent block are sent to the
 lightest underloaded block (deterministic stand-in for the reference's random

@@ -371,17 +371,6 @@ class _Welford:
         return self.mean, var
 
 
-def ip_num_repetitions(final_k: int, k: int, multiplier: float = 1.0,
-                       min_reps: int = 10, max_reps: int = 50) -> int:
-    """Adaptive repetition budget: ceil(multiplier * final_k / ceil_log2(k)),
-    clamped to [min, max] (initial_partitioning_facade.h:38,
-    context.cc:325-328 defaults)."""
-    from kaminpar_spark.functions.rules import ceil_log2
-
-    reps = math.ceil(multiplier * final_k / max(1, ceil_log2(max(2, k))))
-    return max(min_reps, min(max_reps, reps))
-
-
 def pool_bipartition(
     g: SmallGraph,
     epsilon: float,
@@ -441,8 +430,6 @@ def recursive_bisect(
     k_final: int | None = None,
     total_weight_root: int | None = None,
     final_k: int | None = None,
-    multilevel: bool = True,
-    replication_threads: int = 1,
 ) -> np.ndarray:
     """Recursive bisection to k blocks (helper.cc:87-176
     extend_partition_recursive). ``final_k`` (>= k) is how many of the FINAL
@@ -453,12 +440,8 @@ def recursive_bisect(
     recursion side carries (k_i, final_k_i). With final_k == k (the default)
     this reduces to plain bisection toward k.
 
-    ``multilevel=True`` (default, the reference's behavior) runs each
-    bisection through the sequential multilevel pipeline (E6/E7,
-    multilevel_bipartition); False bisects the graph flat (pool only).
-    ``replication_threads > 1`` instead runs each bisection through the E9
-    split-and-join replica tree (replicated_bipartition) with that thread
-    budget — mid-coarsening forks + best-of joins."""
+    Every bisection runs the sequential multilevel pipeline (E6/E7,
+    multilevel_bipartition), as the reference's InitialPartitioner does."""
     final_k = final_k or k
     k_final = k_final or final_k
     total_weight_root = total_weight_root or g.total_weight
@@ -470,14 +453,7 @@ def recursive_bisect(
     )
     fk1, fk2 = split_integral(final_k)
     k1, k2 = split_integral(k)
-    if replication_threads > 1:
-        def bipartition(gg, ee, seed, ratio):
-            return replicated_bipartition(
-                gg, ee, seed=seed, num_threads=replication_threads, ratio=ratio
-            )
-    else:
-        bipartition = multilevel_bipartition if multilevel else pool_bipartition
-    part = bipartition(g, eps_prime, seed=seed, ratio=(fk1, fk2))
+    part = multilevel_bipartition(g, eps_prime, seed=seed, ratio=(fk1, fk2))
     if k1 == 1 and k2 == 1:
         return part
     out = np.zeros(g.n, dtype=np.int64)
@@ -499,7 +475,7 @@ def recursive_bisect(
         sub_part = recursive_bisect(
             sub, k_side, epsilon, seed=seed + offset + 1,
             k_final=k_final, total_weight_root=total_weight_root,
-            final_k=fk_side, multilevel=multilevel,
+            final_k=fk_side,
         )
         out[members] = offset + sub_part
     return out
@@ -627,29 +603,6 @@ def multilevel_bipartition(
     return part
 
 
-def compute_num_copies(
-    n: int, converged: bool, num_threads: int, contraction_limit: int = IP_CONTRACTION_LIMIT
-) -> int:
-    """The reference's replica-fork rule (helper.cc:211-227
-    compute_num_copies): while the graph is still large relative to the
-    contraction limit C, keep ONE chain coarsening (f = 2^ceil(log2(n/C)) >
-    threads); once n is within reach, split the thread budget into
-    threads/f replica groups; at n <= 2C (or a converged coarsener), fan out
-    fully — one replica per remaining thread.
-
-    The float division in ``log2(n / c)`` is deliberate and matches the
-    reference exactly: helper.cc:219 computes ``log2(1.0 * n / C)`` in
-    floating point. Only the sibling compute_k_for_n (helper.cc:207, our
-    rules.deep_k_prime) uses integer division ``n / C``."""
-    c = max(1, contraction_limit)
-    if converged or n <= 2 * c:
-        return num_threads
-    f = 1 << max(0, math.ceil(math.log2(n / c)))
-    if f > num_threads:
-        return 1
-    return max(1, num_threads // f)
-
-
 def bipartition_caps(
     g: SmallGraph, epsilon: float, ratio: tuple[int, int] = (1, 1)
 ) -> tuple[float, float]:
@@ -677,192 +630,6 @@ def bipartition_score(
     return (infeasible, cut_of(g, part))
 
 
-def replicated_bipartition(
-    g: SmallGraph,
-    epsilon: float,
-    seed: int = 42,
-    num_threads: int = 4,
-    repetitions: int = 4,
-    ratio: tuple[int, int] = (1, 1),
-    trace: list | None = None,
-) -> np.ndarray:
-    """E9: the reference's split-and-join replica TREE
-    (parallel_initial_partitioner.cc:11-69 partition_recursive /
-    split_and_join), not just a coarsest-graph seed portfolio. The chain
-    coarsens while the graph is large (compute_num_copies returns 1); once
-    within reach of the contraction limit it FORKS mid-coarsening into
-    replica groups, each continuing to coarsen independently under its own
-    seed AND eps flavor (_REPLICA_EPS_FLAVORS — sibling leaves bipartition
-    under perturbed balance constraints, always SCORED against the true
-    caps); leaf replicas (thread budget 1) run the full sequential
-    multilevel bipartition (helper::bipartition base case); every join
-    selects the best replica by (infeasibility, cut) (select_best,
-    helper.h:77-104) and every unwind projects + 2-way-FM-refines one level
-    (uncoarsen_once + refine). Driver-sized numpy — the forks cost
-    leaf-count x base work, bounded by ``num_threads``.
-
-    ``trace``, if given, records (n, num_copies) at each fork (>1 copy) so
-    tests can assert forks happen MID-coarsening (n > contraction limit).
-
-    Restructured in r5 (VERDICT item 5 wall-reclaim): the tree's replica-0
-    SPINE now *is* the sequential chain — one rng stream drives its
-    coarsening levels and its unwind FM, exactly as multilevel_bipartition's
-    does, with sibling subtrees forked off at the copies-rule levels and
-    joined by select_best as the spine unwinds (a challenger track projects
-    and FM-refines the best surviving sibling under a side rng so it never
-    perturbs the spine's stream). The previous structure recomputed the
-    whole chain a second time as a never-worse guard (+5-30% measured wall
-    for what BENCH/PARTITION_QUALITY.md showed to be cut-for-cut ties); now
-    the guard is one final (infeasibility, cut) comparison between the
-    challenger and the spine — never worse than the chain, at the cost of
-    the sibling leaves only."""
-    if g.n == 0:
-        return np.zeros(0, dtype=np.int64)
-    max_cw = int(IP_CLUSTER_WEIGHT_MULTIPLIER * (1 + epsilon) * g.total_weight / 2)
-    caps = bipartition_caps(g, epsilon, ratio)
-
-    def score(gr: SmallGraph, part: np.ndarray) -> tuple[int, int]:
-        return bipartition_score(gr, part, caps)
-
-    def partition_recursive(
-        cur: SmallGraph, threads: int, s: int, flavor: int
-    ) -> np.ndarray:
-        if threads <= 1:
-            # sequential base case: full multilevel bipartition (E6+E7).
-            # Sibling replicas are DIVERSIFIED beyond their rng stream
-            # (VERDICT r4 item 5: seed-only replicas converged to the chain's
-            # local optimum cut-for-cut on every measured grid cell): each
-            # non-chain flavor leaf searches under a perturbed epsilon —
-            # tighter caps force structurally different growing/FM basins,
-            # looser caps widen the search (the portfolio-diversity spirit of
-            # pool_bipartitioner.h:253-268's seven registered strategies).
-            # Every candidate is still SCORED against the TRUE caps at the
-            # join, and flavor 0 (the chain-seed replica) is untouched, so
-            # the never-worse guarantee is preserved.
-            eps_leaf = epsilon * _REPLICA_EPS_FLAVORS[flavor % len(_REPLICA_EPS_FLAVORS)]
-            return multilevel_bipartition(
-                cur, eps_leaf, seed=s, repetitions=repetitions, ratio=ratio
-            )
-        rng = np.random.default_rng(s ^ 0x9E3779B9)
-        shrunk, mapping, coarse = False, None, cur
-        if cur.n > IP_CONTRACTION_LIMIT:
-            leader, moves = lp_cluster_seq(cur, max_cw, rng)
-            c_n = cur.n - moves
-            if (1.0 - c_n / cur.n) > IP_CONVERGENCE_THRESHOLD:
-                coarse, mapping = contract_clustering(cur, leader)
-                shrunk = True
-        part = split_and_join(coarse, threads, not shrunk, s, flavor)
-        if shrunk:
-            part = part[mapping]
-            part = fm_refine_2way(cur, part, caps, rng=rng)
-        return part
-
-    def split_and_join(
-        cur: SmallGraph, threads: int, converged: bool, s: int, flavor: int
-    ) -> np.ndarray:
-        copies = compute_num_copies(cur.n, converged, threads)
-        if trace is not None and copies > 1:
-            trace.append((int(cur.n), copies))
-        tpc = max(1, threads // copies)
-        best: tuple[tuple[int, int], np.ndarray] | None = None
-        for c in range(copies):
-            # replica 0 keeps the chain seed (and the chain flavor when it is
-            # itself replica 0 of every enclosing fork); siblings get derived
-            # streams and distinct leaf flavors
-            p = partition_recursive(
-                cur, tpc, s + 7919 * c, flavor if c == 0 else 3 * flavor + c
-            )
-            sc = score(cur, p)
-            if best is None or sc < best[0]:
-                best = (sc, p)
-        return best[1]
-
-    # ---- spine descent: the EXACT sequential chain (one rng stream, same
-    # level cadence as multilevel_bipartition), forking sibling subtrees at
-    # every level where the copies rule splits the thread budget. Sibling
-    # partitions are recorded per fork depth and joined during the unwind.
-    rng = np.random.default_rng(seed ^ 0x9E3779B9)
-    hierarchy: list[tuple[SmallGraph, np.ndarray]] = []
-    fork_map: dict[int, list[np.ndarray]] = {}
-    cur, threads, converged = g, num_threads, False
-    while True:
-        copies = compute_num_copies(cur.n, converged, threads)
-        if copies > 1:
-            if trace is not None:
-                trace.append((int(cur.n), copies))
-            tpc = max(1, threads // copies)
-            fork_map.setdefault(len(hierarchy), []).extend(
-                partition_recursive(cur, tpc, seed + 7919 * c, c)
-                for c in range(1, copies)
-            )
-            threads = tpc
-        if converged or cur.n <= IP_CONTRACTION_LIMIT:
-            break
-        leader, moves = lp_cluster_seq(cur, max_cw, rng)
-        c_n = cur.n - moves
-        if (1.0 - c_n / cur.n) <= IP_CONVERGENCE_THRESHOLD:
-            # let the copies rule see the converged graph (full fan-out of
-            # the remaining thread budget) before the spine pools it
-            converged = True
-            continue
-        cg, mapping = contract_clustering(cur, leader)
-        hierarchy.append((cur, mapping))
-        cur = cg
-
-    # ---- spine unwind (chain-identical): pool the coarsest graph at the
-    # chain seed, then project + FM with the chain rng per level. A
-    # CHALLENGER track carries the best surviving sibling upward under a
-    # side rng (so it never touches the spine's stream); at each fork depth
-    # freshly joined siblings compete with it by (infeasibility, cut).
-    part = pool_bipartition(
-        cur, epsilon, seed=seed, repetitions=repetitions, ratio=ratio
-    )
-    side_rng = np.random.default_rng((seed * 0x9E3779B9 + 0x85EBCA6B) & ((1 << 63) - 1))
-
-    def pick(gr: SmallGraph, cands: list[np.ndarray]) -> np.ndarray | None:
-        out, osc = None, None
-        for p in cands:
-            if p is None:
-                continue
-            sc = score(gr, p)
-            if out is None or sc < osc:
-                out, osc = p, sc
-        return out
-
-    depth = len(hierarchy)
-    best = pick(cur, fork_map.get(depth, []))
-    for fine, mapping in reversed(hierarchy):
-        depth -= 1
-        part = fm_refine_2way(fine, part[mapping], caps, rng=rng)
-        if best is not None:
-            best = fm_refine_2way(fine, best[mapping], caps, rng=side_rng)
-        cands = fork_map.get(depth, [])
-        if cands:
-            best = pick(fine, ([best] if best is not None else []) + cands)
-    # chain-identity: mirror multilevel_bipartition's flat-pool fallback for
-    # an infeasible multilevel result (same seed, same ordering)
-    if hierarchy:
-        sp_sc = score(g, part)
-        if sp_sc[0] > 0:
-            flat = pool_bipartition(
-                g, epsilon, seed=seed, repetitions=repetitions, ratio=ratio
-            )
-            if score(g, flat) < sp_sc:
-                part = flat
-    # never-worse guard: the spine IS the chain (bit-identical rng stream),
-    # so one final comparison suffices — no second chain computation
-    if best is not None and score(g, best) < score(g, part):
-        return best
-    return part
-
-
-# Leaf-replica epsilon multipliers (flavor index -> eps factor). Flavor 0 is
-# the untouched chain replica; the others tighten/loosen the leaf's balance
-# constraint to land in different refinement basins. Chosen to keep every
-# perturbed epsilon within a sane IP range (0.5x..2x of the true eps).
-_REPLICA_EPS_FLAVORS = (1.0, 0.5, 2.0, 0.75, 1.5, 0.6, 1.25)
-
-
 def best_of_bisections(
     g: SmallGraph,
     k: int,
@@ -871,18 +638,14 @@ def best_of_bisections(
     k_final: int | None = None,
     total_weight_root: int | None = None,
     final_k: int | None = None,
-    replication_threads: int = 1,
 ) -> np.ndarray:
-    """Deep-IP replication, driver analog (E9): the reference forks
-    coarsening+IP replicas across threads and keeps the best result
-    (parallel_initial_partitioner.cc:11-69, copies rule helper.cc:211-227).
-    Here the coarsest graph is already driver-sized, so the portfolio is R
-    independent seeded recursive bisections scored by (infeasibility, cut) —
-    the same select_best ordering as helper.h:77-104. With
-    ``replication_threads > 1`` each portfolio member additionally runs its
-    bisections through the split-and-join replica TREE
-    (replicated_bipartition) — mid-coarsening coarsener forks, the
-    reference's full E9 shape."""
+    """Best of R seeded recursive bisections, one per seed in ``seeds``,
+    scored by (infeasibility, cut) — the select_best ordering of
+    helper.h:77-104. Repeating the seeded portfolio is the reference's
+    quality lever (pool repetitions, initial_partitioning_facade.h:38). Its
+    thread-parallel replica fork (parallel_initial_partitioner.cc:11-69)
+    only keeps idle threads busy, and on one driver it would be extra serial
+    work, so each bisection here is one sequential chain."""
     final_k = final_k or k
     k_final = k_final or final_k
     from kaminpar_spark.functions.rules import fill_final_k, max_block_weight_final_k
@@ -903,7 +666,6 @@ def best_of_bisections(
         labels = recursive_bisect(
             g, k, epsilon, seed=s, k_final=k_final,
             total_weight_root=total_weight_root, final_k=final_k,
-            replication_threads=replication_threads,
         )
         bw = _block_weights(g, labels, k)
         infeasible = int(np.maximum(0, bw - caps).sum())

@@ -181,7 +181,6 @@ class Partitioner:
         cluster_weight_limit: str = "epsilon-block-weight",
         cluster_weight_multiplier: float = 1.0,
         ip_replications: int = 3,
-        ip_replication_threads: int = 2,
         coarsener: str = "lp",
     ):
         """``scheme='deep'`` (default) mirrors the reference's deep multilevel
@@ -205,18 +204,9 @@ class Partitioner:
           "one", "zero"} x ``cluster_weight_multiplier`` — the rule for the
           soft cluster cap during coarsening (--c-cluster-weight-limit;
           "zero" disables the cap like the reference's ZERO).
-        - ``ip_replications``: deep-IP replication (E9,
-          parallel_initial_partitioner.cc:11-69): run the coarsest-graph
-          bisection portfolio R times with distinct seeds, keep the best by
-          (feasible, cut).
-        - ``ip_replication_threads``: thread budget for the split-and-join
-          replica TREE inside each portfolio member (replicated_bipartition;
-          copies rule helper.cc:211-227) — replicas fork MID-coarsening and
-          the best bisection wins at each join. 1 disables the tree (single
-          sequential chain per bisection); the coarsest graph is
-          driver-sized, so the default 2 costs at most ~2x the sequential
-          initial partition and buys back quality variance on unlucky
-          clusterings.
+        - ``ip_replications``: run the coarsest-graph bisection portfolio R
+          times with distinct seeds, keep the best by (feasible, cut)
+          (pool repetitions, initial_partitioning_facade.h:38).
 
         ``coarsener``, ``max_num_neighbors``, ``large_degree_threshold`` and
         ``cluster_weight_*`` shape only the Spark levels, which run while a
@@ -246,7 +236,6 @@ class Partitioner:
         assert coarsener in ("lp", "hem")
         self.coarsener = coarsener
         self.ip_replications = max(1, ip_replications)
-        self.ip_replication_threads = max(1, ip_replication_threads)
 
     def _cluster_cap(self, epsilon: float, total_w: int, n: int, k: int) -> int | None:
         if self.cluster_weight_limit == "zero":
@@ -382,7 +371,6 @@ class Partitioner:
             sg, k0, epsilon,
             seeds=[self.seed + 7919 * r for r in range(self.ip_replications)],
             k_final=k, total_weight_root=total_w, final_k=k,
-            replication_threads=self.ip_replication_threads,
         )
         cur_k = k0
         # per-block final-block bookkeeping (graph_utils.cc:43-60)

@@ -77,8 +77,8 @@ def test_deep_scheme_non_power_of_two_k(spark, k):
 
 
 def test_best_of_bisections_not_worse_than_single_seed(spark):
-    """Deep-IP replication (E9): best-of-R by (feasible, cut) can only match
-    or beat the single-seed result on the same coarsest graph."""
+    """The seed portfolio: best-of-R by (feasible, cut) can only match or
+    beat the single-seed result on the same coarsest graph."""
     from kaminpar_spark.plans.initial import (
         best_of_bisections,
         cut_of,
@@ -92,69 +92,6 @@ def test_best_of_bisections_not_worse_than_single_seed(spark):
     seeds = [42 + 7919 * r for r in range(4)]
     best = cut_of(sg, best_of_bisections(sg, 4, 0.05, seeds=seeds, final_k=4))
     assert best <= single
-
-
-def test_replicated_coarsening_tree_on_transcript_graph(spark):
-    """E9 completed (VERDICT r3 item 5): the split-and-join replica tree
-    (replicated_bipartition, parallel_initial_partitioner.cc:11-69) forks
-    MID-coarsening — the trace records a fork at n strictly above the
-    contraction limit, i.e. replicas duplicate the COARSENER, not just the
-    coarsest graph — and the best-of result is never worse than the single
-    sequential multilevel chain on the transcript-derived actor graph."""
-    from kaminpar_spark.plans.initial import (
-        IP_CONTRACTION_LIMIT,
-        bipartition_caps,
-        bipartition_score,
-        multilevel_bipartition,
-        replicated_bipartition,
-    )
-    from kaminpar_spark.plans.partitioner import Partitioner as P
-    from kaminpar_spark.sources.transcripts import synth_transcripts, transcript_graph
-
-    g, _ = transcript_graph(synth_transcripts(spark, 400), n_convs=400)
-    sg, _ = P(g, spark)._collect_small(g)
-    assert sg.n > 4 * IP_CONTRACTION_LIMIT  # coarsening has room to fork mid-way
-
-    trace: list = []
-    rep = replicated_bipartition(sg, 0.05, seed=42, num_threads=4, trace=trace)
-    single = multilevel_bipartition(sg, 0.05, seed=42)
-    assert trace, "replica tree never forked"
-    assert any(n > IP_CONTRACTION_LIMIT for n, _ in trace), trace
-    # never-worse guard compares (infeasibility, cut) — the tuple select_best
-    # actually optimizes (ADVICE r4: a raw-cut assertion is fragile when the
-    # tree wins on feasibility with a higher cut)
-    caps = bipartition_caps(sg, 0.05)
-    assert bipartition_score(sg, rep, caps) <= bipartition_score(sg, single, caps), (
-        bipartition_score(sg, rep, caps),
-        bipartition_score(sg, single, caps),
-        trace,
-    )
-    # determinism: same seed, same tree, same labels
-    rep2 = replicated_bipartition(sg, 0.05, seed=42, num_threads=4)
-    assert (rep == rep2).all()
-
-
-def test_recursive_bisect_replication_threads_feasible(spark):
-    """recursive_bisect(replication_threads=4) routes every bisection through
-    the replica tree and still lands a feasible k=4 partition with cut no
-    worse than the single-chain run."""
-    from kaminpar_spark.plans.initial import cut_of, recursive_bisect
-    from kaminpar_spark.plans.partitioner import Partitioner as P
-
-    g, _, _ = fixtures.erdos_renyi(spark, n=300, p=0.03, seed=11)
-    sg, _ = P(g, spark)._collect_small(g)
-    single = cut_of(sg, recursive_bisect(sg, 4, 0.05, seed=42, final_k=4))
-    rep = cut_of(
-        sg,
-        recursive_bisect(sg, 4, 0.05, seed=42, final_k=4, replication_threads=4),
-    )
-    assert rep <= single * 1.5 + 5  # same ballpark or better; tree is seeded differently
-    bw = np.bincount(
-        recursive_bisect(sg, 4, 0.05, seed=42, final_k=4, replication_threads=4),
-        weights=sg.nweights,
-        minlength=4,
-    )
-    assert bw.max() <= (1 + 0.05) * sg.total_weight / 4 + sg.nweights.max()
 
 
 @pytest.mark.slow
@@ -384,22 +321,3 @@ def test_rgg2d_generator_matches_brute_force(spark):
                 want += 1
     assert g.num_half_edges() == 2 * want
 
-
-def test_replicated_spine_is_the_exact_chain(spark):
-    """r5 restructure invariant: the tree's replica-0 spine consumes the
-    SAME rng stream as multilevel_bipartition, so with num_threads=1 (no
-    forks possible) replicated_bipartition must return the chain's labels
-    bit-for-bit — the never-worse guard is then one comparison, not a
-    second chain computation."""
-    from kaminpar_spark.plans.initial import (
-        multilevel_bipartition,
-        replicated_bipartition,
-    )
-    from kaminpar_spark.plans.partitioner import Partitioner as P
-    from kaminpar_spark.sources.transcripts import synth_transcripts, transcript_graph
-
-    g, _ = transcript_graph(synth_transcripts(spark, 250), n_convs=250)
-    sg, _ = P(g, spark)._collect_small(g)
-    rep = replicated_bipartition(sg, 0.05, seed=42, num_threads=1)
-    chain = multilevel_bipartition(sg, 0.05, seed=42)
-    assert (rep == chain).all()

@@ -12,6 +12,8 @@ import ast
 from collections import Counter
 from pathlib import Path
 
+import pytest
+
 ENTRY = Path(__file__).resolve().parent.parent / "__spark_entry__.py"
 
 
@@ -56,3 +58,35 @@ def test_partition_verify_oracle_reads_only_this_runs_snapshot(monkeypatch, tmp_
     assert e._PV_RUN_NONCE in mine and "sf0.5" in mine
     assert f"read_parquet('{mine}/*.parquet')" in sql
     assert sql.count("read_parquet(") == 1
+
+
+
+def test_semdedup_oracle_corpus_size(monkeypatch, tmp_path):
+    """The oracle derives k from the gate corpus it is pointed at: an
+    embeddings parquet that exists but cannot be read raises instead of
+    silently pinning n=500, the failed read leaves no aborted DuckDB
+    transaction behind for the next read, and a missing corpus keeps the
+    n=500 default (the oracle dict is built for every query)."""
+    import duckdb
+
+    import __spark_entry__ as e
+    from kaminpar_spark.functions.similarity import semdedup_auto_k
+
+    bad, good, missing = tmp_path / "bad", tmp_path / "good", tmp_path / "missing"
+    bad.mkdir()
+    good.mkdir()
+    (bad / "embeddings.parquet").write_bytes(b"not a parquet file")
+    with duckdb.connect() as con:
+        con.execute(
+            f"COPY (SELECT range AS vec_id FROM range(5000)) "
+            f"TO '{good / 'embeddings.parquet'}' (FORMAT parquet)"
+        )
+    assert semdedup_auto_k(5000) != semdedup_auto_k(500)
+
+    monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF", str(bad))
+    with pytest.raises(duckdb.Error):
+        e._semdedup_sql()
+    monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF", str(good))
+    assert e._kmeans_sql(k=semdedup_auto_k(5000)) in e._semdedup_sql()
+    monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF", str(missing))
+    assert e._kmeans_sql(k=semdedup_auto_k(500)) in e._semdedup_sql()

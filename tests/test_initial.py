@@ -199,7 +199,7 @@ def test_multilevel_bipartition_finds_planted_cut():
 
 def test_recursive_bisect_multilevel_ring():
     g = ring(64)
-    labels = recursive_bisect(g, 4, epsilon=0.03, seed=42, multilevel=True)
+    labels = recursive_bisect(g, 4, epsilon=0.03, seed=42)
     assert set(np.unique(labels)) == {0, 1, 2, 3}
     bw = np.bincount(labels, weights=g.nweights, minlength=4)
     assert bw.max() <= (1 + 0.03) * 16 + 1

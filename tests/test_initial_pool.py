@@ -1,5 +1,5 @@
-"""Pool fidelity (VERDICT r1 item 8): Welford adaptive selection, repetition
-budget rule, queue-length BFS strategies. Pure numpy — no Spark session."""
+"""Pool fidelity (VERDICT r1 item 8): Welford adaptive selection and
+queue-length BFS strategies. Pure numpy — no Spark session."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from kaminpar_spark.plans.initial import (
     _Welford,
     bipartition_bfs,
     cut_of,
-    ip_num_repetitions,
     pool_bipartition,
 )
 
@@ -30,14 +29,6 @@ def test_welford_matches_numpy():
     mean, var = w.get()
     assert mean == np.mean(xs)
     assert abs(var - np.var(xs)) < 1e-12
-
-
-def test_ip_num_repetitions_rule():
-    # ceil(1.0 * final_k / ceil_log2(k)) clamped to [10, 50]
-    # (initial_partitioning_facade.h:38, context.cc:325-328)
-    assert ip_num_repetitions(8, 8) == 10      # ceil(8/3)=3 -> clamp up
-    assert ip_num_repetitions(128, 8) == 43    # ceil(128/3)
-    assert ip_num_repetitions(1024, 16) == 50  # 256 -> clamp down
 
 
 def test_queue_strategies_produce_valid_bipartitions():
