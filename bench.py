@@ -4,8 +4,9 @@ on local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
 Headline metric (BASELINE.json): edges processed/sec per superstep for
 PageRank + LPA to convergence on the transcript-derived edge table —
 total_half_edges * supersteps / wall_sec. Per-query wall times are also
-reported. Scaling protocol (N vs 4N cores) lives in scripts/scaling_bench.py
-which runs this at SPARK_GRAFT_CPUS=8 and =32 and writes BENCH/BASELINE.md.
+reported. The scaling protocol (N vs 4N cores) does not run this file:
+scripts/scale.py times the kernels alone over a pre-built input, one fresh
+Spark process per core count, and writes BENCH/<KERNEL>_SCALING.md.
 """
 
 from __future__ import annotations
@@ -73,9 +74,9 @@ def main():
     queries: dict[str, float] = {}
 
     # ---- ETL: transcripts -> edge table (scalable dense ids) ----
-    # SPARK_GRAFT_BENCH_CONVS overrides the sf-derived conversation count so
-    # the scaling protocol can synthesize enough work to amortize fixed
-    # per-superstep overhead (scripts/scaling_bench.py).
+    # SPARK_GRAFT_BENCH_CONVS overrides the sf-derived conversation count, so
+    # a run can synthesize enough work to amortize fixed per-superstep
+    # overhead.
     # Metric-region note: the conversation count now usually comes from the
     # parquet footer read above (outside the timed region); earlier rounds
     # timed a spark.read.count() job here, so round-over-round ETL
@@ -92,13 +93,13 @@ def main():
     queries["etl_edge_table"] = round(time.time() - t0, 3)
     _phase("etl done")
 
-    # ---- PageRank (fixed supersteps for a stable throughput metric; blocks
-    # of 5 chained supersteps amortize fixed planning/launch overhead) ----
-    # NOTE: steps_per_block chaining is a trap here — a superstep references
-    # its input state 2-3 times (gather + argmax + final join), so chaining k
-    # steps without materialization recomputes the subtree ~3^k times
-    # (measured: a 4-chained LPA block took 211 s vs 4 x 2 s materialized).
-    # One localCheckpoint per superstep is the right granularity.
+    # ---- PageRank (fixed supersteps for a stable throughput metric) ----
+    # NOTE: chaining supersteps into one plan is a trap — a superstep
+    # references its input state 2-3 times (gather + argmax + final join), so
+    # chaining k steps without materialization recomputes the subtree ~3^k
+    # times (measured: a 4-chained LPA block took 211 s vs 4 x 2 s
+    # materialized). One localCheckpoint per superstep is the right
+    # granularity.
     t0 = time.time()
     pagerank(gp, tol=0.0, max_iters=pr_iters).count()
     pr_sec = time.time() - t0

@@ -58,12 +58,9 @@ def connected_components(
     runner=None,
     two_phase: bool = True,
     on_metrics=None,
-    steps_per_block: int = 1,
     init_labels: DataFrame | None = None,
 ) -> DataFrame:
     """Returns (id, comp) where comp = min node id in the component.
-    ``steps_per_block`` chains supersteps into one materialized plan to
-    amortize fixed driver overhead (see pagerank).
 
     ``init_labels``: optional (id, comp) warm start — e.g. the converged
     labels of a previous snapshot's run. Hash-to-min is monotone in the
@@ -90,12 +87,8 @@ def connected_components(
         )
 
     def step(s: DataFrame, i: int) -> DataFrame:
-        cur = s
-        for _ in range(steps_per_block):
-            cur = cc_step(graph, cur)
-            if two_phase:
-                cur = _pointer_double(cur)
-        return cur
+        cur = cc_step(graph, s)
+        return _pointer_double(cur) if two_phase else cur
 
     def metrics(new: DataFrame) -> dict:
         # one agg on the already-materialized state (not a filter+count job
@@ -108,11 +101,10 @@ def connected_components(
     def converged(m: dict) -> bool:
         return m["moved"] == 0
 
-    n_blocks = -(-max_iters // steps_per_block)
     if runner is not None:
-        final = runner.run("connected_components", state, step, metrics, converged, n_blocks)
+        final = runner.run("connected_components", state, step, metrics, converged, max_iters)
     else:
-        final = run_in_memory(state, step, metrics, converged, n_blocks, on_metrics)
+        final = run_in_memory(state, step, metrics, converged, max_iters, on_metrics)
     return final.select("id", "comp")
 
 

@@ -251,7 +251,6 @@ def label_propagation(
     min_moved_frac: float = 0.0,
     on_metrics=None,
     name: str = "labelprop",
-    steps_per_block: int = 1,
     track_convergence: bool = True,
 ) -> DataFrame:
     """Run LP from singleton labels to (near-)convergence. Returns (id, label).
@@ -266,20 +265,14 @@ def label_propagation(
         "id", F.col("id").alias("label"), "weight", F.lit(0).alias("moved")
     )
 
-    if max_cluster_weight is not None:
-        steps_per_block = 1  # capped config truncates internally per step
-
     def step(s: DataFrame, i: int) -> DataFrame:
-        cur = s
-        for j in range(steps_per_block):
-            cur = lp_step(
-                graph,
-                cur,
-                step_idx=i * steps_per_block + j,
-                max_cluster_weight=max_cluster_weight,
-                semi_sync=semi_sync,
-            )
-        return cur
+        return lp_step(
+            graph,
+            s,
+            step_idx=i,
+            max_cluster_weight=max_cluster_weight,
+            semi_sync=semi_sync,
+        )
 
     def metrics(new: DataFrame) -> dict:
         if not track_convergence:
@@ -301,11 +294,10 @@ def label_propagation(
             return quiet
         return quiet and len(history) >= 2 and history[-2] <= min_moved_frac * n
 
-    n_blocks = -(-max_iters // steps_per_block)
     if runner is not None:
-        final = runner.run(name, state, step, metrics, converged, n_blocks)
+        final = runner.run(name, state, step, metrics, converged, max_iters)
     else:
-        final = run_in_memory(state, step, metrics, converged, n_blocks, on_metrics)
+        final = run_in_memory(state, step, metrics, converged, max_iters, on_metrics)
     return final.select("id", "label")
 
 

@@ -107,18 +107,10 @@ def pagerank(
     weighted: bool = False,
     runner=None,
     on_metrics=None,
-    steps_per_block: int = 1,
     warm_start: DataFrame | None = None,
 ) -> DataFrame:
     """Run to convergence; returns (id, rank). With a SuperstepRunner the loop
-    is durable + resumable; otherwise in-memory with truncated lineage.
-
-    ``steps_per_block`` chains that many supersteps into ONE materialized
-    plan — the fixed per-superstep driver cost (planning + job launch,
-    ~0.3-1 s) is paid once per block instead of once per step. Convergence is
-    then checked at block granularity. Requires no dangling nodes (their mass
-    aggregate needs a materialization per step); falls back to 1 otherwise.
-    """
+    is durable + resumable; otherwise in-memory with truncated lineage."""
     from kaminpar_spark.plans.superstep import run_in_memory
 
     n = graph.num_nodes()
@@ -128,17 +120,12 @@ def pagerank(
     has_dangling = (
         state.where(F.col("out_norm") == 0.0).limit(1).count() > 0
     )
-    if has_dangling:
-        steps_per_block = 1
 
     def step(s: DataFrame, i: int) -> DataFrame:
-        cur = s
-        for _ in range(steps_per_block):
-            cur = pagerank_step(
-                graph, cur, n, damping, weighted,
-                dangling_mass=None if has_dangling else 0.0,
-            )
-        return cur
+        return pagerank_step(
+            graph, s, n, damping, weighted,
+            dangling_mass=None if has_dangling else 0.0,
+        )
 
     if tol <= 0.0:
         # fixed-iteration mode: no convergence aggregate -> one less Spark
@@ -158,11 +145,10 @@ def pagerank(
         def converged(m: dict) -> bool:
             return m["residual_l1"] < tol
 
-    n_blocks = -(-max_iters // steps_per_block)
     if runner is not None:
-        final = runner.run("pagerank", state, step, metrics, converged, n_blocks)
+        final = runner.run("pagerank", state, step, metrics, converged, max_iters)
     else:
-        final = run_in_memory(state, step, metrics, converged, n_blocks, on_metrics)
+        final = run_in_memory(state, step, metrics, converged, max_iters, on_metrics)
     return final.select("id", "rank")
 
 

@@ -32,8 +32,6 @@ Writes BENCH/SKEW.md (one section per scenario).
 from __future__ import annotations
 
 import argparse
-import glob
-import json
 import os
 import statistics
 import sys
@@ -93,32 +91,22 @@ def stage_straggler_ratios(event_dir: str, after_ms: float = 0.0) -> list[dict]:
     ``after_ms`` (epoch ms) drops stages that began before the kernel under
     test — the input-generation stages pay first-stage JIT/classloading on
     their first tasks, which reads as a fake straggler."""
+    from perfbench.eventlog import read_events
+
     stages: dict[int, list[float]] = {}
     first_launch: dict[int, float] = {}
-    # Spark 4 writes a rolling eventlog_v2_<app> DIRECTORY of json parts
-    paths = [
-        p
-        for p in glob.glob(os.path.join(event_dir, "**", "*"), recursive=True)
-        if os.path.isfile(p) and "appstatus" not in os.path.basename(p)
-    ]
-    for path in paths:
-        with open(path) as f:
-            for line in f:
-                try:
-                    ev = json.loads(line)
-                except json.JSONDecodeError:
-                    continue
-                if ev.get("Event") != "SparkListenerTaskEnd":
-                    continue
-                info = ev.get("Task Info", {})
-                dur = (info.get("Finish Time", 0) - info.get("Launch Time", 0)) / 1e3
-                if dur > 0:
-                    sid = ev.get("Stage ID", -1)
-                    stages.setdefault(sid, []).append(dur)
-                    first_launch[sid] = min(
-                        first_launch.get(sid, float("inf")),
-                        info.get("Launch Time", 0),
-                    )
+    for ev in read_events(event_dir):
+        if ev.get("Event") != "SparkListenerTaskEnd":
+            continue
+        info = ev.get("Task Info", {})
+        dur = (info.get("Finish Time", 0) - info.get("Launch Time", 0)) / 1e3
+        if dur > 0:
+            sid = ev.get("Stage ID", -1)
+            stages.setdefault(sid, []).append(dur)
+            first_launch[sid] = min(
+                first_launch.get(sid, float("inf")),
+                info.get("Launch Time", 0),
+            )
     out = []
     for sid, durs in sorted(stages.items()):
         if first_launch.get(sid, 0) < after_ms:
