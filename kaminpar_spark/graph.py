@@ -51,10 +51,13 @@ class GraphFrame:
     hubs: DataFrame | None = None
     _prepared: bool = field(default=False, repr=False)
     # True when `nodes` was derived from the edge endpoints (from_edge_pairs
-    # with nodes=None) — lets prepare() rebuild it from the persisted edge
-    # cache instead of dragging the full upstream lineage into every
+    # with nodes=None) — lets prepare() rebuild it from the laid-out edge
+    # blocks instead of dragging the full upstream lineage into every
     # node-table consumer.
     _nodes_derived: bool = field(default=False, repr=False)
+    # num_nodes()/num_half_edges(), counted once: the frames never change.
+    _num_nodes: int | None = field(default=None, repr=False)
+    _num_half_edges: int | None = field(default=None, repr=False)
 
     # ---------------------------------------------------------------- build
     @staticmethod
@@ -98,10 +101,14 @@ class GraphFrame:
 
     # ------------------------------------------------------------- measures
     def num_nodes(self) -> int:
-        return self.nodes.count()
+        if self._num_nodes is None:
+            self._num_nodes = self.nodes.count()
+        return self._num_nodes
 
     def num_half_edges(self) -> int:
-        return self.edges.count()
+        if self._num_half_edges is None:
+            self._num_half_edges = self.edges.count()
+        return self._num_half_edges
 
     def total_node_weight(self) -> int:
         """graph.cc:13-35 eager aggregate — here a lazy agg (computed on demand)."""
@@ -204,76 +211,85 @@ class GraphFrame:
         salt_factor: int = 8,
         spark: SparkSession | None = None,
     ) -> "GraphFrame":
-        """Materialize the scale layout: salted, src-hash-partitioned edge blocks.
+        """Materialize the scale layout: hash-partitioned edge blocks that
+        every superstep joins without shuffling them again.
+
+        A graph without hubs is laid out by ``src`` alone: ``edges`` keep
+        (src, dst, weight), hash-partitioned by ``src`` into
+        ``num_partitions``. The node table is hash-partitioned by ``id``
+        into the same count, so a vertex state that comes out of a join or
+        aggregate on ``id`` is co-partitioned with the edges, and the gather
+        join (``src == id``) runs with no exchange on either side.
 
         The reference *skips* nodes with degree >= large_degree_threshold in LP
         (parallel_label_propagation.h:200). We instead *salt* them (north
         rule): a hub ``src`` with degree d >= threshold gets its edges spread
         over ``salt_factor`` sub-partitions via ``salt = pmod(xxhash64(dst),
-        S)``; every gather join then joins on (src, salt) with the small state
-        side exploded over the hub's salts. Partial aggregation recombines.
+        S)`` (non-hub rows get salt 0). A graph with hubs carries that
+        ``salt`` column and is hash-partitioned by (src, salt); its gather
+        joins on (src, salt) with the small state side exploded over the
+        hub's salts, so only the state shuffles. Partial aggregation
+        recombines.
 
-        The returned GraphFrame's ``edges`` carry a ``salt`` column and are
-        hash-partitioned by (src, salt) and persisted, so the per-superstep
-        gather join never re-shuffles the (large) edge side.
+        Edges, nodes and hubs are ``lineage.truncate``d (not persisted; see
+        that module's header for why), so the layout survives into every
+        plan over them; ``unpersist()`` releases their blocks. Supersteps
+        stay co-partitioned when ``num_partitions`` equals
+        ``spark.sql.shuffle.partitions`` (the default).
         """
+        from kaminpar_spark.plans.lineage import release, truncate
+
         spark = spark or SparkSession.getActiveSession()
         num_partitions = num_partitions or int(
             spark.conf.get("spark.sql.shuffle.partitions", "32")
         )
         # Materialize the edge table ONCE before the two consumers below:
-        # without this, the hub-degree job and the salted persist each drag
+        # without this, the hub-degree job and the layout job each drag
         # the full upstream lineage (ETL window + dense-id joins) through a
         # separate execution — prepare paid the whole ETL twice (measured
         # ~2x prepare wall at sf0.1).
-        from kaminpar_spark.plans.lineage import truncate
-
-        base = truncate(self.edges)
+        base = truncate(self.edges.select("src", "dst", "weight"))
         deg = base.groupBy("src").agg(F.count("*").alias("degree"))
-        hubs = deg.where(F.col("degree") >= hub_degree_threshold).select(
-            F.col("src").alias("id"), F.lit(salt_factor).alias("n_salts")
-        )
-        hubs = hubs.persist()
-        n_hubs = hubs.count()  # materialize; hub set is small by construction
-        e = base.join(
-            F.broadcast(hubs), base.src == hubs.id, "left"
-        ).select(
-            "src",
-            "dst",
-            "weight",
-            F.when(
-                F.col("n_salts").isNotNull(),
-                F.pmod(F.xxhash64("dst"), F.lit(salt_factor)),
+        hubs = truncate(
+            deg.where(F.col("degree") >= hub_degree_threshold).select(
+                F.col("src").alias("id"), F.lit(salt_factor).alias("n_salts")
             )
-            .otherwise(F.lit(0))
-            .cast("int")
-            .alias("salt"),
         )
-        e = e.repartition(num_partitions, "src", "salt").persist()
-        e.count()
-        from kaminpar_spark.plans.lineage import release
-
-        release(base)  # salted layout is materialized; drop the staging copy
-        # Rebuild a derived node table from the now-persisted edges: the
-        # original `nodes` plan hangs off the full upstream lineage (ETL,
-        # dense-ids, ...), which every consumer (num_nodes, each operator's
-        # init state) would otherwise recompute from scratch — measured 10s
-        # per consumer at sf0.1 vs <1s for a distinct over the edge cache.
-        # Explicit node tables (weights / isolated nodes) are kept as-is.
-        if self._nodes_derived:
-            nodes = (
-                e.select(F.col("src").alias("id"))
-                .distinct()
-                .withColumn("weight", F.lit(1).cast("long"))
-                .persist()
+        if hubs.count():  # the hub set is small by construction
+            e = base.join(F.broadcast(hubs), base.src == hubs.id, "left").select(
+                "src",
+                "dst",
+                "weight",
+                F.when(
+                    F.col("n_salts").isNotNull(),
+                    F.pmod(F.xxhash64("dst"), F.lit(salt_factor)),
+                )
+                .otherwise(F.lit(0))
+                .cast("int")
+                .alias("salt"),
             )
+            e = truncate(e.repartition(num_partitions, "src", "salt"))
         else:
-            nodes = self.nodes
+            release(hubs)
+            hubs = None
+            e = truncate(base.repartition(num_partitions, "src"))
+        release(base)  # the layout is materialized; drop the staging copy
+        # Rebuild a derived node table from the laid-out edges: the original
+        # `nodes` plan hangs off the full upstream lineage (ETL, dense-ids,
+        # ...), which every consumer (num_nodes, each operator's init state)
+        # would otherwise recompute from scratch — measured 10s per consumer
+        # at sf0.1 vs <1s for a distinct over the edge blocks. Explicit node
+        # tables (weights / isolated nodes) are laid out by id as they are.
+        if self._nodes_derived:
+            nodes = e.select(F.col("src").alias("id")).distinct()
+            nodes = nodes.withColumn("weight", F.lit(1).cast("long"))
+        else:
+            nodes = self.nodes.repartition(num_partitions, "id")
         prepared = GraphFrame(
             edges=e,
-            nodes=nodes,
-            salt_factor=salt_factor if n_hubs else 1,
-            hubs=hubs if n_hubs else None,
+            nodes=truncate(nodes),
+            salt_factor=salt_factor if hubs is not None else 1,
+            hubs=hubs,
             _nodes_derived=self._nodes_derived,
         )
         prepared._prepared = True
@@ -281,10 +297,8 @@ class GraphFrame:
 
     def salted_state(self, state: DataFrame) -> DataFrame:
         """Explode a vertex-state DataFrame (keyed ``id``) over hub salts so it
-        can equi-join prepared edges on (src==id, salt). Non-hub rows get the
-        single salt 0."""
-        if not self._prepared or self.hubs is None:
-            return state.withColumn("salt", F.lit(0).cast("int"))
+        can equi-join the salted edge layout on (src==id, salt). Non-hub rows
+        get the single salt 0. Only for a prepared graph with hubs."""
         s = state.join(F.broadcast(self.hubs.select("id", "n_salts")), "id", "left")
         return (
             s.withColumn(
@@ -304,35 +318,39 @@ class GraphFrame:
         """THE join of the engine (J1, parallel_label_propagation.h:278-286):
         attach per-``src`` vertex state to every half-edge. Returns
         (src, dst, weight, *value_cols); aggregate by ``dst`` downstream to
-        implement scatter-sum/min/argmax. Uses the salted layout when prepared
-        so the edge side's partitioning is reused superstep over superstep."""
-        if self._prepared:
-            # Join-strategy note (measured at 9.45M half-edges, 750k nodes):
-            # lineage.truncate resets the state leaf's stats to
-            # defaultSizeInBytes (= huge), so unhinted the planner sort-merge-
-            # joins — sorting the m-scale edge side EVERY superstep (PR
-            # superstep 15s). broadcast() fixes the sort but serializes a
-            # driver-side relation build per superstep (12s). SHUFFLE_HASH is
-            # right at every scale: the persisted edge side's (src, salt)
-            # hash partitioning is reused (no exchange, no sort); only the
-            # n-scale state shuffles, and the per-partition build is n /
-            # num_partitions rows (1.4s, and scales with cores).
-            s = self.salted_state(state.select("id", *value_cols)).hint("shuffle_hash")
-            return self.edges.join(
-                s, (self.edges.src == s.id) & (self.edges.salt == s.salt), "inner"
-            ).select("src", "dst", "weight", *value_cols)
-        # Unprepared path: same hint rationale — truncated leaves carry
-        # defaultSizeInBytes stats, so the unhinted planner sort-merge-joins
-        # and SORTS the m-scale edge side even for a one-shot gather.
-        s = state.select("id", *value_cols).hint("shuffle_hash")
-        return self.edges.join(s, self.edges.src == s.id, "inner").select(
-            "src", "dst", "weight", *value_cols
-        )
+        implement scatter-sum/min/argmax.
+
+        On a prepared graph the edge side is never shuffled: without hubs
+        the join is on ``src`` alone, matching the edge layout, and a state
+        partitioned by ``id`` (every truncated superstep state) is not
+        shuffled either; with hubs the join is on (src, salt), matching the
+        salted layout, and only the exploded state shuffles."""
+        # Join-strategy note (measured at 9.45M half-edges, 750k nodes):
+        # lineage.truncate resets the state leaf's stats to
+        # defaultSizeInBytes (= huge), so unhinted the planner sort-merge-
+        # joins — sorting the m-scale edge side EVERY superstep (PR
+        # superstep 15s). broadcast() fixes the sort but serializes a
+        # driver-side relation build per superstep (12s). SHUFFLE_HASH is
+        # right at every scale: the edge side's hash partitioning is reused
+        # (no exchange, no sort) and the per-partition build is
+        # n / num_partitions rows (1.4s, and scales with cores). The
+        # unprepared path takes the same hint: without it even a one-shot
+        # gather SORTS the m-scale edge side.
+        s = state.select("id", *value_cols)
+        if self.hubs is not None:  # only prepare() sets hubs
+            s = self.salted_state(s).hint("shuffle_hash")
+            cond = (self.edges.src == s.id) & (self.edges.salt == s.salt)
+        else:
+            s = s.hint("shuffle_hash")
+            cond = self.edges.src == s.id
+        return self.edges.join(s, cond, "inner").select("src", "dst", "weight", *value_cols)
 
     def unpersist(self) -> None:
+        """Release the blocks ``prepare`` materialized. The graph must not be
+        used afterwards (its lineage is truncated)."""
         if self._prepared:
-            self.edges.unpersist()
-            if self._nodes_derived:
-                self.nodes.unpersist()
-            if self.hubs is not None:
-                self.hubs.unpersist()
+            from kaminpar_spark.plans.lineage import release
+
+            release(self.edges)
+            release(self.nodes)
+            release(self.hubs)

@@ -17,7 +17,7 @@ the geometric bit is ``h & -h`` (lowest set bit of a uniform residue), the
 lowest-zero rank is ``bit_count(((~m) & (m+1)) - 1)``.
 
 Scale notes: state is K int64 columns per node (K=4 default → 32 bytes);
-the superstep reuses the salted persisted edge layout via GraphFrame.gather,
+the superstep reuses the prepared edge layout via GraphFrame.gather,
 and ``bit_or`` partial-aggregates map-side, so hubs cost one combiner each.
 Estimator range: the geometric bit comes from a 31-bit residue, so ranks cap
 at 31 and ball sizes are estimable up to ~2^31 (~2·10^9) nodes per stream —

@@ -19,10 +19,17 @@ constraint and admission policy:
   (parallel_label_propagation.h:229-243). Never overloads a block.
 
 One superstep (all configs):
-    scores  = edges ⋈ labels on src (GraphFrame.gather — salted layout)
+    scores  = edges ⋈ labels on src (GraphFrame.gather — on a prepared graph
+              neither side is shuffled)
               .groupBy(dst, label).sum(weight)
     best    = argmax_{label} score per dst, tie-break smallest label
     move if best strictly beats the current label's score (ties keep)
+
+On a prepared graph without hubs, a steady unconstrained superstep runs two
+shuffles: the (dst, label) score aggregate and its re-key by ``id``; the
+edges and the ``id``-partitioned state stay in place. The first superstep
+runs one: its labels equal the ids, so the score aggregate already sits in
+the edge layout.
 
 Semi-synchronous scheduling (``semi_sync=True``): only nodes with
 pmod(xxhash64(id), 2) == step%2 may move — the BSP de-correlation replacing

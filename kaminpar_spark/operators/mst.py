@@ -27,7 +27,7 @@ Algorithm (classic Boruvka, all DataFrame ops, no per-row Python):
 
 Rounds halve the component count at minimum, so O(log n) rounds total.
 
-Scale notes (100 TB): step 1 reuses the graph's salted, persisted edge layout
+Scale notes (100 TB): step 1 reuses the prepared graph's edge layout
 (GraphFrame.gather semantics); step 2 is a map-side-combinable hash
 aggregate keyed by component; step 3 never touches the m-scale edge table —
 only the per-round selected forest (<= one edge per component). The label

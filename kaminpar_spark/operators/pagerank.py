@@ -1,11 +1,16 @@
 """PageRank as bulk-synchronous supersteps (SURVEY.md I8, north rule).
 
 One superstep = the engine's canonical gather/scatter:
-    contribs = edges ⋈ state on src   (GraphFrame.gather — salted layout, the
-                                       big edge side is never re-shuffled)
+    contribs = edges ⋈ state on src   (GraphFrame.gather — on a prepared
+                                       graph neither side is shuffled)
     sums     = contribs.groupBy(dst).sum()  (partial/map-side agg absorbs hub
                                             dst keys before the shuffle)
     ranks'   = (1-d)/n + d * (sums + dangling_mass/n)
+
+On a prepared graph without hubs the state (hash-partitioned by ``id``
+through ``lineage.truncate``), the edges (by ``src``) and ``sums`` (by ``id``)
+are co-partitioned, so a steady in-memory superstep runs exactly one shuffle:
+the ``groupBy(dst)`` message aggregate.
 
 Dangling (degree-0) nodes redistribute their mass uniformly, matching the
 standard power-iteration oracle. Convergence metric: residual L1 =
@@ -99,6 +104,16 @@ def pagerank_step(
     )
 
 
+def _has_dangling(graph: GraphFrame, state: DataFrame) -> bool:
+    """Whether any node has out_norm 0. When it is False the per-step
+    dangling-mass aggregate is skipped (one Spark job per superstep). A
+    derived node table holds only edge sources, so every out-degree is at
+    least 1 by construction and the probe job is skipped too."""
+    if graph._nodes_derived:
+        return False
+    return state.where(F.col("out_norm") == 0.0).limit(1).count() > 0
+
+
 def pagerank(
     graph: GraphFrame,
     damping: float = 0.85,
@@ -115,11 +130,7 @@ def pagerank(
 
     n = graph.num_nodes()
     state = init_ranks(graph, n, weighted=weighted, warm_start=warm_start)
-    # one upfront job: if no dangling nodes exist, skip the per-step
-    # dangling-mass aggregate entirely (one Spark job per superstep saved)
-    has_dangling = (
-        state.where(F.col("out_norm") == 0.0).limit(1).count() > 0
-    )
+    has_dangling = _has_dangling(graph, state)
 
     def step(s: DataFrame, i: int) -> DataFrame:
         return pagerank_step(
@@ -189,7 +200,7 @@ def personalized_pagerank(
         .withColumn("rank", F.col("reset"))
         .withColumn("old_rank", F.lit(0.0))
     )
-    has_dangling = state.where(F.col("out_norm") == 0.0).limit(1).count() > 0
+    has_dangling = _has_dangling(graph, state)
 
     def step(s: DataFrame, i: int) -> DataFrame:
         dangling_mass = (

@@ -128,16 +128,18 @@ class SuperstepRunner:
             self.clear(name)
         os.makedirs(self._dir(name), exist_ok=True)
         done = [r for r in self.completed_steps(name) if r.get("durable")]
-        start, state = 0, init_state
         if done:
+            # a snapshot read is already a flat plan: no checkpoint on top
             last = done[-1]
             state = read_table(self.spark, last["path"])
             if last.get("converged"):
                 return state
             start = last["step"] + 1
-        state = truncate(state)
+        else:
+            start, state = 0, truncate(init_state)
         for i in range(start, max_iters):
             t0 = time.time()
+            pre = persistent_rdd_ids(self.spark)
             new = step(state, i)
             durable = (i % self.checkpoint_every == 0) or (i == max_iters - 1)
             snap = os.path.join(self._dir(name), f"step={i}")
@@ -165,6 +167,11 @@ class SuperstepRunner:
             }
             with open(self._manifest(name), "a") as f:
                 f.write(json.dumps(rec) + "\n")
+            # Block-manager hygiene as in run_in_memory: the superseded state
+            # and whatever this step checkpointed that ``new`` is not.
+            created = persistent_rdd_ids(self.spark) - pre
+            release(state)
+            release_ids(self.spark, created - getattr(new, "_kaminpar_chk_ids", set()))
             state = new
             if is_conv:
                 break

@@ -63,8 +63,7 @@ def main():
         n_convs = spark.read.parquet(f"{sf_dir}/orders.parquet").count()
         t = synth_transcripts(spark, n_convs)
         g, _ = transcript_graph(t, n_convs, stable_ids=False, num_partitions=cpus)
-        g.nodes.persist()
-        g.edges.persist()
+        g = g.prepare(num_partitions=cpus, spark=spark)
         sf = os.path.basename(sf_dir.rstrip("/"))
         sizes[sf] = (g.num_nodes(), g.num_half_edges())
         for k in ks:
@@ -88,8 +87,7 @@ def main():
                     }
                 )
                 print(rows[-1], flush=True)
-        g.nodes.unpersist()
-        g.edges.unpersist()
+        g.unpersist()
 
     size_lines = [
         f"{sf}: {n:,} nodes, {m:,} half-edges" for sf, (n, m) in sizes.items()

@@ -63,3 +63,20 @@ def test_checkpoint_every_k(spark, tmp_path):
     recs = runner.completed_steps("pagerank")
     durable = [r["step"] for r in recs if r["durable"]]
     assert 0 in durable and 3 in durable and 6 in durable  # every 3rd + last
+
+
+def test_durable_runner_releases_superseded_checkpoints(spark, tmp_path):
+    """Non-durable steps (checkpoint_every=2) are in-memory checkpoints;
+    once superseded they, and the initial state's checkpoint, are released,
+    so the run leaves at most the final state's blocks behind."""
+    from kaminpar_spark.plans.lineage import persistent_rdd_ids
+
+    g, _, _ = fixtures.erdos_renyi(spark, n=120, p=0.04, seed=3, hub_overlay=0)
+    runner = SuperstepRunner(spark, str(tmp_path), checkpoint_every=2)
+    before = persistent_rdd_ids(spark)
+    ranks = pagerank(g, tol=0.0, max_iters=5, runner=runner)
+    left = persistent_rdd_ids(spark) - before
+    assert [r["durable"] for r in runner.completed_steps("pagerank")] == [
+        True, False, True, False, True
+    ]
+    assert left <= getattr(ranks, "_kaminpar_chk_ids", set()), left
