@@ -31,7 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from kaminpar_spark.plans.lineage import release, truncate
+from kaminpar_spark.plans.lineage import release
+from kaminpar_spark.plans.superstep import run_supersteps
 
 END_WORD = "</w>"
 
@@ -65,18 +66,17 @@ def bpe_learn(
     (`word_dict` output, e.g. persisted once and reused across tokenizer
     experiments); when given, the corpus pass is skipped entirely."""
     spark = docs.sparkSession
-    state = truncate(
-        (words if words is not None else word_dict(docs, text_col)).select(
-            "word",
-            "freq",
-            F.expr(
-                "concat(transform(sequence(1, length(word)),"
-                f" i -> substr(word, i, 1)), array({_sq(END_WORD)}))"
-            ).alias("toks"),
-        )
+    init = (words if words is not None else word_dict(docs, text_col)).select(
+        "word",
+        "freq",
+        F.expr(
+            "concat(transform(sequence(1, length(word)),"
+            f" i -> substr(word, i, 1)), array({_sq(END_WORD)}))"
+        ).alias("toks"),
     )
-    records = []
-    for r in range(1, rounds + 1):
+    merges, records = [], []
+
+    def step(state: DataFrame, i: int) -> DataFrame:
         pairs = (
             state.select(
                 "freq",
@@ -93,33 +93,30 @@ def bpe_learn(
         )
         best = pairs.orderBy(F.desc("cnt"), "l", "r").first()
         a, b = best["l"], best["r"]
+        merges.append((i + 1, a, b, int(best["cnt"])))
         la, lb, lm = _sq(a), _sq(b), _sq(a + b)
-        new_state = truncate(
-            state.select(
-                "word",
-                "freq",
-                F.expr(
-                    "aggregate(toks, cast(array() AS array<string>),"
-                    " (acc, t) -> CASE WHEN size(acc) > 0"
-                    f" AND element_at(acc, -1) = {la} AND t = {lb}"
-                    " THEN concat(slice(acc, 1, size(acc) - 1),"
-                    f" array({lm}))"
-                    " ELSE concat(acc, array(t)) END)"
-                ).alias("toks"),
-            )
+        return state.select(
+            "word",
+            "freq",
+            F.expr(
+                "aggregate(toks, cast(array() AS array<string>),"
+                " (acc, t) -> CASE WHEN size(acc) > 0"
+                f" AND element_at(acc, -1) = {la} AND t = {lb}"
+                " THEN concat(slice(acc, 1, size(acc) - 1),"
+                f" array({lm}))"
+                " ELSE concat(acc, array(t)) END)"
+            ).alias("toks"),
         )
-        # new_state is eagerly materialized, so the superseded generation's
-        # checkpoint blocks can go — without this, `rounds` generations of
-        # the full toks-array dictionary pile up in the block manager and
-        # the resulting eviction/GC pressure throttles concurrent tasks
-        # (same superstep discipline as the graph kernels).
-        release(state)
-        state = new_state
-        tokens_after = state.agg(
-            F.sum(F.col("freq") * F.size("toks"))
-        ).first()[0]
-        records.append((r, a, b, int(best["cnt"]), int(tokens_after)))
-    release(state)
+
+    def metrics(new: DataFrame) -> dict:
+        return {"tokens_after": int(new.agg(F.sum(F.col("freq") * F.size("toks"))).first()[0])}
+
+    release(
+        run_supersteps(
+            init, step, metrics, lambda m: False, rounds,
+            on_metrics=lambda i, m: records.append(merges[i] + (m["tokens_after"],)),
+        )
+    )
     return spark.createDataFrame(
         records,
         "merge_round long, merge_left string, merge_right string,"

@@ -26,7 +26,8 @@ from pyspark.sql import DataFrame, Window, functions as F
 def dense_ids(
     df: DataFrame, key: str, num_partitions: int | None = None, out: str = "dense_id"
 ) -> DataFrame:
-    """Map ``distinct df[key]`` -> dense 0..n-1 longs. Returns (key, out).
+    """Map ``distinct df[key]`` -> dense 0..n-1 longs. Returns (key, out),
+    carrying the checkpoint id of its frozen key table (``lineage.carry``).
     Default partition count follows spark.sql.shuffle.partitions."""
     import pandas as pd  # noqa: F401  (imported for the kernel closure)
 
@@ -41,7 +42,7 @@ def dense_ids(
     # coalesce their shuffle partitions differently -> offset table keyed by
     # the wrong pids -> overlapping id ranges (silent node merging; observed
     # as a run-to-run half-edge count drift at bench scale).
-    from kaminpar_spark.plans.lineage import truncate
+    from kaminpar_spark.plans.lineage import carry, truncate
 
     keys = truncate(keys)
     counts = (
@@ -69,7 +70,7 @@ def dense_ids(
             seen += n
             yield pdf
 
-    return keys.mapInPandas(assign, schema=schema)
+    return carry(keys.mapInPandas(assign, schema=schema), keys)
 
 
 def dense_ids_by_order(df: DataFrame, key: str, out: str = "dense_id") -> DataFrame:

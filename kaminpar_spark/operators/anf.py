@@ -33,7 +33,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from kaminpar_spark.functions.hashing import POLY_MOD
 from kaminpar_spark.graph import GraphFrame
-from kaminpar_spark.plans.lineage import release, truncate
+from kaminpar_spark.plans.lineage import carry, release, truncate
+from kaminpar_spark.plans.superstep import run_supersteps
 
 # Per-stream affine mixers (primes, same family as operators.walks): each
 # term < 2^45, ANSI-safe in int64 without intermediate pmod.
@@ -114,14 +115,9 @@ def anf_masks(
     def converged(m: dict) -> bool:
         return runner is not None and m.get("changed") == 0
 
-    from kaminpar_spark.plans.superstep import run_in_memory
-
     init = init_masks(graph.nodes, streams)
-    if runner is not None:
-        final = runner.run(name, init, step, metrics, converged, rounds)
-    else:
-        final = run_in_memory(init, step, metrics, converged, rounds)
-    return final.select("id", *cols)
+    final = run_supersteps(init, step, metrics, converged, rounds, runner, name)
+    return carry(final.select("id", *cols), final)
 
 
 def anf_ranks(masks: DataFrame, streams: int = 4) -> DataFrame:
@@ -181,20 +177,18 @@ def neighborhood_function(
     """Global N(t) = sum over nodes of estimated |ball(v, t)| for t=0..max_t —
     the classic ANF curve (effective-diameter readout). Driver-side list of
     (t, estimate); one agg per t over the running mask state."""
-    state = truncate(init_masks(graph.nodes, streams))
-    out: list[tuple[int, float]] = []
-
-    def read(s: DataFrame) -> float:
+    def read(s: DataFrame) -> dict:
         ranks = anf_ranks(s, streams)
         est = F.pow(F.lit(2.0), F.col("r_sum") / F.lit(float(streams))) / F.lit(PHI)
-        return float(ranks.agg(F.sum(est).alias("nf")).first()["nf"])
+        return {"nf": float(ranks.agg(F.sum(est).alias("nf")).first()["nf"])}
 
-    out.append((0, read(state)))
-    for t in range(1, max_t + 1):
-        new = truncate(anf_round(graph, state, streams))
-        release(state)
-        state = new
-        out.append((t, read(state)))
+    init = truncate(init_masks(graph.nodes, streams))
+    out = [(0, read(init)["nf"])]
+    final = run_supersteps(
+        init, lambda s, i: anf_round(graph, s, streams), read, lambda m: False, max_t,
+        on_metrics=lambda i, m: out.append((i + 1, m["nf"])), truncate_init=False,
+    )
+    release(final)
     return out
 
 

@@ -38,7 +38,8 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from kaminpar_spark.graph import GraphFrame
 from kaminpar_spark.operators.labelprop import label_scores
-from kaminpar_spark.plans.lineage import release, truncate
+from kaminpar_spark.plans.lineage import truncate
+from kaminpar_spark.plans.superstep import run_supersteps
 
 
 def _with_caps(bw: DataFrame, max_block_weight: int | list[int]) -> DataFrame:
@@ -88,12 +89,7 @@ def balance_round(
     bw = truncate(_with_caps(bw, max_block_weight))
     over = bw.where(F.col("bweight") > F.col("cap"))
     if over.limit(1).count() == 0:
-        # already balanced: nothing to do, but bw's staging blocks must
-        # still reach the caller's release (carry on a fresh wrapper so the
-        # caller's own DataFrame object is not mutated)
-        from kaminpar_spark.plans.lineage import carry
-
-        return carry(partition.alias("balanced"), bw)
+        return partition  # already balanced
 
     scores = truncate(label_scores(graph, state))  # (id, label, score)
     cur = partition.join(graph.nodes.select("id", "weight"), "id")
@@ -190,16 +186,10 @@ def balance_round(
     admitted = _grouped_admission(admitted_src, resid_t, "target", "residual").select(
         "id", F.col("target").cast("int").alias("new_block")
     )
-    out = (
+    return (
         partition.join(admitted, "id", "left")
         .select("id", F.coalesce("new_block", "block").cast("int").alias("block"))
     )
-    # the round's staging checkpoints (bw, scores, best) ride along so the
-    # caller can release them once the round's output is materialized
-    # (balance() does; see lineage.carry)
-    from kaminpar_spark.plans.lineage import carry
-
-    return carry(out, bw, scores, best)
 
 
 BAL_GAIN_BUCKETS = 4096
@@ -271,23 +261,26 @@ def balance(
 ) -> DataFrame:
     """Iterate balance rounds until no block exceeds its cap (scalar or
     per-block list, see balance_round)."""
-    part = truncate(partition)
-    for _ in range(max_rounds):
-        bw = (
-            graph.nodes.join(part, "id")
-            .groupBy("block")
-            .agg(F.sum("weight").alias("bweight"))
-        )
-        total_over = (
+
+    def overload(part: DataFrame) -> dict:
+        bw = graph.nodes.join(part, "id").groupBy("block").agg(F.sum("weight").alias("bweight"))
+        total = (
             _with_caps(bw, max_block_weight)
             .agg(F.sum(F.greatest(F.lit(0), F.col("bweight") - F.col("cap"))))
             .first()[0]
         )
-        if not total_over:
-            break
-        round_out = balance_round(graph, part, max_block_weight, k=k)
-        new_part = truncate(round_out)
-        release(round_out)  # the round's carried staging checkpoints
-        release(part)
-        part = new_part
-    return part
+        return {"overload": total or 0}
+
+    rounds_left = iter(range(max_rounds - 1, -1, -1))
+
+    def overload_if_rounds_left(new: DataFrame) -> dict:
+        # after the last round nothing reads the check
+        return overload(new) if next(rounds_left) else {"overload": None}
+
+    part = truncate(partition)
+    if overload(part)["overload"] == 0:
+        return part
+    return run_supersteps(
+        part, lambda s, i: balance_round(graph, s, max_block_weight, k=k),
+        overload_if_rounds_left, lambda m: m["overload"] == 0, max_rounds, truncate_init=False,
+    )

@@ -47,7 +47,8 @@ from kaminpar_spark.functions.hashing import POLY_MULT2, POLY_MULT3, char_poly_h
 from kaminpar_spark.graph import GraphFrame
 from kaminpar_spark.operators.components import connected_components
 from kaminpar_spark.operators.paths import relax_step
-from kaminpar_spark.plans.lineage import release, truncate
+from kaminpar_spark.plans.lineage import carry, release, truncate
+from kaminpar_spark.plans.superstep import run_supersteps
 
 
 def bfs_forest(
@@ -59,24 +60,26 @@ def bfs_forest(
     truncated and every downstream verdict wrong)."""
     if cc is None:
         cc = connected_components(graph)
-    state = truncate(
-        cc.select(
-            "id",
-            "comp",
-            F.when(F.col("id") == F.col("comp"), F.lit(0)).cast("long").alias("dist"),
-            F.when(F.col("id") == F.col("comp"), F.lit(1)).otherwise(F.lit(0)).alias(
-                "changed"
-            ),
-        )
+    init = cc.select(
+        "id",
+        "comp",
+        F.when(F.col("id") == F.col("comp"), F.lit(0)).cast("long").alias("dist"),
+        F.when(F.col("id") == F.col("comp"), F.lit(1)).otherwise(F.lit(0)).alias("changed"),
     )
-    for _ in range(max_hops):
-        nxt = truncate(relax_step(graph, state.select("id", "dist", "changed"), False))
-        moved = nxt.agg(F.sum("changed")).first()[0] or 0
-        release(state)
-        state = nxt
-        if moved == 0:
-            break
-    else:
+    moved: list[int] = []
+
+    def metrics(new: DataFrame) -> dict:
+        return {"moved": new.agg(F.sum("changed")).first()[0] or 0}
+
+    def converged(m: dict) -> bool:
+        moved.append(m["moved"])
+        return m["moved"] == 0
+
+    state = run_supersteps(
+        init, lambda s, i: relax_step(graph, s.select("id", "dist", "changed"), False),
+        metrics, converged, max_hops,
+    )
+    if not moved or moved[-1] != 0:
         raise ValueError(f"bfs_forest: frontier still moving after max_hops={max_hops}")
     unreached = state.where(F.col("dist").isNull()).limit(1).count()
     if unreached:
@@ -99,7 +102,9 @@ def bfs_forest(
         .join(up.withColumnRenamed("id", "_uid"), F.col("id") == F.col("_uid"), "left")
         .select("id", "comp", "level", "parent")
     )
-    return truncate(out)
+    out = truncate(out)
+    release(state)
+    return out
 
 
 def _edge_tags(a: F.Column, b: F.Column) -> tuple[F.Column, F.Column]:
@@ -140,30 +145,32 @@ def bridges(
             F.coalesce("x2", F.lit(0)).cast("long").alias("x2"),
         )
     )
-    max_level = state.agg(F.max("level")).first()[0] or 0
+    max_level = int(state.agg(F.max("level")).first()[0] or 0)
+
     # bottom-up peel: one sweep from the deepest level — every child of a
     # level-L node is exactly at L+1, so its subtree XOR is already final
-    for lvl in range(int(max_level), 0, -1):
+    def step(s: DataFrame, i: int) -> DataFrame:
         contrib = (
-            state.where(F.col("level") == lvl)
+            s.where(F.col("level") == max_level - i)
             .groupBy("parent")
             .agg(F.bit_xor("x1").alias("c1"), F.bit_xor("x2").alias("c2"))
             .withColumnRenamed("parent", "id")
         )
-        nxt = truncate(
-            state.join(contrib.hint("shuffle_hash"), "id", "left").select(
-                "id",
-                "parent",
-                "level",
-                F.col("x1").bitwiseXOR(F.coalesce("c1", F.lit(0))).alias("x1"),
-                F.col("x2").bitwiseXOR(F.coalesce("c2", F.lit(0))).alias("x2"),
-            )
+        return s.join(contrib.hint("shuffle_hash"), "id", "left").select(
+            "id",
+            "parent",
+            "level",
+            F.col("x1").bitwiseXOR(F.coalesce("c1", F.lit(0))).alias("x1"),
+            F.col("x2").bitwiseXOR(F.coalesce("c2", F.lit(0))).alias("x2"),
         )
-        release(state)
-        state = nxt
-    return state.where(
+
+    state = run_supersteps(
+        state, step, lambda new: {}, lambda m: False, max_level, truncate_init=False
+    )
+    out = state.where(
         F.col("parent").isNotNull() & (F.col("x1") == 0) & (F.col("x2") == 0)
     ).select(F.least("id", "parent").alias("a"), F.greatest("id", "parent").alias("b"))
+    return carry(out, state)
 
 
 def two_edge_components(graph: GraphFrame, max_hops: int = 32) -> DataFrame:
@@ -273,10 +280,11 @@ def _tv_block_labels(graph: GraphFrame, forest: DataFrame) -> DataFrame:
             F.col("pre").alias("maxpre"),
         )
     )
-    max_level = state.agg(F.max("level")).first()[0] or 0
-    for lvl in range(int(max_level), 0, -1):
+    max_level = int(state.agg(F.max("level")).first()[0] or 0)
+
+    def step(s: DataFrame, i: int) -> DataFrame:
         contrib = (
-            state.where(F.col("level") == lvl)
+            s.where(F.col("level") == max_level - i)
             .groupBy("parent")
             .agg(
                 F.min("low").alias("clow"),
@@ -285,19 +293,19 @@ def _tv_block_labels(graph: GraphFrame, forest: DataFrame) -> DataFrame:
             )
             .withColumnRenamed("parent", "id")
         )
-        nxt = truncate(
-            state.join(contrib.hint("shuffle_hash"), "id", "left").select(
-                "id",
-                "parent",
-                "level",
-                "pre",
-                F.least("low", F.coalesce("clow", "low")).alias("low"),
-                F.greatest("high", F.coalesce("chigh", "high")).alias("high"),
-                F.greatest("maxpre", F.coalesce("cmax", "maxpre")).alias("maxpre"),
-            )
+        return s.join(contrib.hint("shuffle_hash"), "id", "left").select(
+            "id",
+            "parent",
+            "level",
+            "pre",
+            F.least("low", F.coalesce("clow", "low")).alias("low"),
+            F.greatest("high", F.coalesce("chigh", "high")).alias("high"),
+            F.greatest("maxpre", F.coalesce("cmax", "maxpre")).alias("maxpre"),
         )
-        release(state)
-        state = nxt
+
+    state = run_supersteps(
+        state, step, lambda new: {}, lambda m: False, max_level, truncate_init=False
+    )
     parent_info = state.select(
         F.col("id").alias("parent"),
         F.col("pre").alias("ppre"),

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from kaminpar_spark.graph import GraphFrame
-from kaminpar_spark.plans.lineage import release, truncate
+from kaminpar_spark.plans.superstep import run_supersteps
 
 
 def threshold_cascade(
@@ -46,9 +46,9 @@ def threshold_cascade(
         active = spark.createDataFrame(
             [(int(i), 0) for i in seeds], "id long, round int"
         )
-    active = truncate(active)
     edges = graph.edges.select("src", "dst")
-    for r in range(1, rounds + 1):
+
+    def step(active: DataFrame, i: int) -> DataFrame:
         counts = (
             edges.join(
                 active.select(F.col("id").alias("src")).hint("shuffle_hash"),
@@ -61,9 +61,8 @@ def threshold_cascade(
             counts.where(F.col("n_active") >= k)
             .select(F.col("dst").alias("id"))
             .join(active.select("id").hint("shuffle_hash"), "id", "left_anti")
-            .withColumn("round", F.lit(r))
+            .withColumn("round", F.lit(i + 1))
         )
-        new_active = truncate(active.unionByName(newly))
-        release(active)
-        active = new_active
-    return active
+        return active.unionByName(newly)
+
+    return run_supersteps(active, step, lambda new: {}, lambda m: False, rounds)

@@ -32,23 +32,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from kaminpar_spark.graph import GraphFrame
-from kaminpar_spark.plans.lineage import release, truncate
+from kaminpar_spark.plans.lineage import truncate
+from kaminpar_spark.plans.superstep import run_supersteps
 
 
 def _forward_sssp_dag(
     graph: GraphFrame, src_df: DataFrame, max_hops: int
 ) -> DataFrame:
     """(s, id, dist, sigma) for all nodes reached within max_hops levels."""
-    state = truncate(
-        src_df.select(
-            F.col("src").alias("s"),
-            F.col("src").alias("id"),
-            F.lit(0).cast("long").alias("dist"),
-            F.lit(1).cast("long").alias("sigma"),
-        )
+    init = src_df.select(
+        F.col("src").alias("s"),
+        F.col("src").alias("id"),
+        F.lit(0).cast("long").alias("dist"),
+        F.lit(1).cast("long").alias("sigma"),
     )
     e = graph.edges.select(F.col("src").alias("id"), "dst")
-    for h in range(1, max_hops + 1):
+
+    def step(state: DataFrame, i: int) -> DataFrame:
+        h = i + 1
         frontier = state.where(F.col("dist") == h - 1)
         cand = (
             frontier.join(e.hint("shuffle_hash"), "id")
@@ -63,10 +64,9 @@ def _forward_sssp_dag(
             )
             .select("s", "id", F.lit(h).cast("long").alias("dist"), "sigma")
         )
-        old = state
-        state = truncate(state.unionByName(new))
-        release(old)
-    return state
+        return state.unionByName(new)
+
+    return run_supersteps(init, step, lambda new: {}, lambda m: False, max_hops)
 
 
 def _backward_accumulate(
@@ -76,17 +76,17 @@ def _backward_accumulate(
     target below v; delta = Brandes dependency. One BFS level per step,
     deepest first."""
     e = graph.edges.select("src", "dst")
-    acc = truncate(
-        fwd.where(F.col("dist") == max_hops).select(
-            "s",
-            "id",
-            "dist",
-            "sigma",
-            F.lit(0).cast("long").alias("g"),
-            F.lit(0.0).alias("delta"),
-        )
+    init = fwd.where(F.col("dist") == max_hops).select(
+        "s",
+        "id",
+        "dist",
+        "sigma",
+        F.lit(0).cast("long").alias("g"),
+        F.lit(0.0).alias("delta"),
     )
-    for lev in range(max_hops - 1, -1, -1):
+
+    def step(acc: DataFrame, i: int) -> DataFrame:
+        lev = max_hops - 1 - i
         below = acc.where(F.col("dist") == lev + 1).select(
             "s", F.col("id").alias("dst"), "sigma", "g", "delta"
         )
@@ -114,10 +114,9 @@ def _backward_accumulate(
                 (F.coalesce("dsum", F.lit(0.0)) * F.col("sigma")).alias("delta"),
             )
         )
-        old = acc
-        acc = truncate(acc.unionByName(lev_nodes))
-        release(old)
-    return acc
+        return acc.unionByName(lev_nodes)
+
+    return run_supersteps(init, step, lambda new: {}, lambda m: False, max_hops)
 
 
 EIG_SCALE = 1_000_000

@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from kaminpar_spark.functions.hashing import POLY_MOD
 from kaminpar_spark.graph import GraphFrame
+from kaminpar_spark.plans.lineage import carry
+from kaminpar_spark.plans.superstep import run_supersteps
 
 COLOR_PRI_A = 1103515245  # LCG multiplier; id < 2^31 keeps a*id within int64
 COLOR_PRI_B = 12345
@@ -88,20 +90,24 @@ def jp_round(graph: GraphFrame, state: DataFrame) -> DataFrame:
     )
 
 
+def _uncolored(graph: GraphFrame) -> DataFrame:
+    """The JP start state (id, pri, color NULL). It is a projection of the
+    node table that the first round computes inline, so the loops below do
+    not truncate it."""
+    return graph.nodes.select(
+        "id", color_priority(F.col("id")).alias("pri"), F.lit(None).cast("long").alias("color")
+    )
+
+
 def jp_color(graph: GraphFrame, rounds: int = 6) -> DataFrame:
     """(id, color) after exactly ``rounds`` Jones-Plassmann supersteps —
     color is NULL for nodes not yet scheduled (the hop-bounded contract of
     bfs_dist4: well-defined and oracle-checkable round by round)."""
-    from kaminpar_spark.plans.lineage import release, truncate
-
-    state = graph.nodes.select(
-        "id", color_priority(F.col("id")).alias("pri"), F.lit(None).cast("long").alias("color")
+    final = run_supersteps(
+        _uncolored(graph), lambda s, i: jp_round(graph, s), lambda new: {}, lambda m: False,
+        rounds, truncate_init=False,
     )
-    for _ in range(rounds):
-        new_state = truncate(jp_round(graph, state))
-        release(state)
-        state = new_state
-    return state.select("id", "color")
+    return carry(final.select("id", "color"), final)
 
 
 def luby_mis_round(graph: GraphFrame, state: DataFrame) -> DataFrame:
@@ -153,16 +159,14 @@ def luby_mis(graph: GraphFrame, rounds: int = 6) -> DataFrame:
     maximal independent set). Deterministic: same hash priorities as
     jp_color. Unlike a clique-bound coloring, Luby halves the undecided set
     per round in expectation on ANY graph."""
-    from kaminpar_spark.plans.lineage import release, truncate
-
     state = graph.nodes.select(
         "id", color_priority(F.col("id")).alias("pri"), F.lit(0).cast("int").alias("st")
     )
-    for _ in range(rounds):
-        new_state = truncate(luby_mis_round(graph, state))
-        release(state)
-        state = new_state
-    return state.select("id", "st")
+    final = run_supersteps(
+        state, lambda s, i: luby_mis_round(graph, s), lambda new: {}, lambda m: False,
+        rounds, truncate_init=False,
+    )
+    return carry(final.select("id", "st"), final)
 
 
 def color_to_completion(graph: GraphFrame, max_rounds: int = 100) -> DataFrame:
@@ -170,15 +174,11 @@ def color_to_completion(graph: GraphFrame, max_rounds: int = 100) -> DataFrame:
     ``max_rounds``; a warning row is impossible — JP colors >= 1 node per
     round, so max_rounds bounds the worst case, and the caller can assert
     no NULLs remain)."""
-    from kaminpar_spark.plans.lineage import release, truncate
+    def metrics(new: DataFrame) -> dict:
+        return {"uncolored": new.where(F.col("color").isNull()).limit(1).count()}
 
-    state = graph.nodes.select(
-        "id", color_priority(F.col("id")).alias("pri"), F.lit(None).cast("long").alias("color")
+    final = run_supersteps(
+        _uncolored(graph), lambda s, i: jp_round(graph, s), metrics,
+        lambda m: m["uncolored"] == 0, max_rounds, truncate_init=False,
     )
-    for _ in range(max_rounds):
-        new_state = truncate(jp_round(graph, state))
-        release(state)
-        state = new_state
-        if state.where(F.col("color").isNull()).limit(1).count() == 0:
-            break
-    return state.select("id", "color")
+    return carry(final.select("id", "color"), final)

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from kaminpar_spark.graph import GraphFrame
+from kaminpar_spark.plans.lineage import carry
+from kaminpar_spark.plans.superstep import run_supersteps
 
 
 def cc_step(graph: GraphFrame, state: DataFrame) -> DataFrame:
@@ -69,8 +71,6 @@ def connected_components(
     after a small edge delta it converges in O(diameter of the changed
     region) supersteps instead of O(diameter of the graph). Nodes absent
     from init_labels (new entrants) start as singletons."""
-    from kaminpar_spark.plans.superstep import run_in_memory
-
     if init_labels is None:
         state = graph.nodes.select(
             "id", F.col("id").alias("comp"), F.col("id").alias("old_comp")
@@ -101,11 +101,10 @@ def connected_components(
     def converged(m: dict) -> bool:
         return m["moved"] == 0
 
-    if runner is not None:
-        final = runner.run("connected_components", state, step, metrics, converged, max_iters)
-    else:
-        final = run_in_memory(state, step, metrics, converged, max_iters, on_metrics)
-    return final.select("id", "comp")
+    final = run_supersteps(
+        state, step, metrics, converged, max_iters, runner, "connected_components", on_metrics
+    )
+    return carry(final.select("id", "comp"), final)
 
 
 def largest_component(graph: GraphFrame, by_edges: bool = False) -> DataFrame:

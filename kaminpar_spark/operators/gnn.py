@@ -150,7 +150,7 @@ def smoothed_features(
     Unfeatured nodes contribute nothing and keep q = floor(0) (callers
     supply a feature row per node; the join is left so missing rows become
     zero vectors, documented)."""
-    from kaminpar_spark.plans.lineage import release, truncate
+    from kaminpar_spark.plans.superstep import run_supersteps
 
     q = quantize_features(feats, dim, feat_col, scale)
     state = (
@@ -163,8 +163,8 @@ def smoothed_features(
             ).alias("q"),
         )
     )
-    state = truncate(state)
-    for _ in range(rounds):
+
+    def step(state: DataFrame, i: int) -> DataFrame:
         gathered = graph.gather(state, ["q"])
         sums = gathered.groupBy(F.col("dst").alias("id")).agg(
             F.count("*").alias("cnt"),
@@ -185,10 +185,9 @@ def smoothed_features(
             F.expr(f"(num{i} - pmod(num{i}, den)) div den").cast("long")
             for i in range(dim)
         ]
-        new_state = truncate(tmp.select("id", F.array(*comps).alias("q")))
-        release(state)
-        state = new_state
-    return state
+        return tmp.select("id", F.array(*comps).alias("q"))
+
+    return run_supersteps(state, step, lambda new: {}, lambda m: False, rounds)
 
 
 def sage_sample(

@@ -25,7 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from kaminpar_spark.graph import GraphFrame
-from kaminpar_spark.plans.lineage import release, truncate
+from kaminpar_spark.plans.lineage import carry, release, truncate
+from kaminpar_spark.plans.superstep import run_supersteps
 
 
 def k_core_members(
@@ -173,20 +174,23 @@ def core_numbers(
     h-index fixpoint (module docstring). ``rounds=N`` runs exactly N
     supersteps with no convergence probes (deterministic unrolled form for
     oracle parity); default iterates to fixpoint (values stop changing)."""
-    state = truncate(graph.degrees().select("id", F.col("degree").alias("c")))
-    n_rounds = rounds if rounds is not None else max_rounds
-    converged = rounds is not None
-    for _ in range(n_rounds):
-        new = truncate(hindex_round(graph, state))
-        release(state)
-        if rounds is None:
-            changed = new.agg(F.sum("changed")).first()[0] or 0
-            if changed == 0:
-                state = new
-                converged = True
-                break
-        state = new
-    if not converged:
+    last: dict = {}
+
+    def metrics(new: DataFrame) -> dict:
+        if rounds is not None:
+            return {}
+        return {"changed": new.agg(F.sum("changed")).first()[0] or 0}
+
+    def converged(m: dict) -> bool:
+        last.update(m)
+        return m.get("changed") == 0
+
+    final = run_supersteps(
+        graph.degrees().select("id", F.col("degree").alias("c")),
+        lambda s, i: hindex_round(graph, s), metrics, converged,
+        rounds if rounds is not None else max_rounds,
+    )
+    if rounds is None and last.get("changed") != 0:
         import logging
 
         logging.getLogger(__name__).warning(
@@ -194,4 +198,4 @@ def core_numbers(
             "— returned values upper-bound the true core numbers",
             max_rounds,
         )
-    return state.select("id", F.col("c").alias("core"))
+    return carry(final.select("id", F.col("c").alias("core")), final)

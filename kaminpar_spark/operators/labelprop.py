@@ -45,7 +45,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from kaminpar_spark.graph import GraphFrame
-from kaminpar_spark.plans.lineage import release, truncate
+from kaminpar_spark.plans.lineage import carry, truncate
+from kaminpar_spark.plans.superstep import run_supersteps
 
 
 def label_scores(graph: GraphFrame, state: DataFrame) -> DataFrame:
@@ -255,19 +256,12 @@ def label_propagation(
     max_cluster_weight: int | None = None,
     semi_sync: bool = True,
     runner=None,
-    min_moved_frac: float = 0.0,
     on_metrics=None,
     name: str = "labelprop",
     track_convergence: bool = True,
 ) -> DataFrame:
-    """Run LP from singleton labels to (near-)convergence. Returns (id, label).
-
-    Stops when moved == 0, or moved/n <= min_moved_frac (the reference's
-    early-stop analog, parallel_label_propagation_coarsener.h:141-143).
-    """
-    from kaminpar_spark.plans.superstep import run_in_memory
-
-    n = graph.num_nodes()
+    """Run LP from singleton labels to convergence (no label moved).
+    Returns (id, label)."""
     state = graph.nodes.select(
         "id", F.col("id").alias("label"), "weight", F.lit(0).alias("moved")
     )
@@ -296,16 +290,12 @@ def label_propagation(
         if not track_convergence:
             return False
         history.append(m["moved"])
-        quiet = m["moved"] <= min_moved_frac * n
         if not semi_sync:
-            return quiet
-        return quiet and len(history) >= 2 and history[-2] <= min_moved_frac * n
+            return m["moved"] == 0
+        return history[-2:] == [0, 0]
 
-    if runner is not None:
-        final = runner.run(name, state, step, metrics, converged, max_iters)
-    else:
-        final = run_in_memory(state, step, metrics, converged, max_iters, on_metrics)
-    return final.select("id", "label")
+    final = run_supersteps(state, step, metrics, converged, max_iters, runner, name, on_metrics)
+    return carry(final.select("id", "label"), final)
 
 
 def seeded_label_propagation(
@@ -325,15 +315,14 @@ def seeded_label_propagation(
     labeled state + one (dst, label) hash aggregate + one struct-max
     aggregate per dst (bounded by the number of DISTINCT labels — a class
     count, not a degree) + one hinted n-scale join."""
-    from kaminpar_spark.plans.lineage import truncate
-
     sd = seeds.select("id", F.col("label").cast("long").alias("seed_label"))
-    state = truncate(
+    state = (
         graph.nodes.select("id")
         .join(sd.hint("shuffle_hash"), "id", "left")
         .select("id", F.col("seed_label"), F.col("seed_label").alias("label"))
     )
-    for _ in range(rounds):
+
+    def step(state: DataFrame, i: int) -> DataFrame:
         labeled = state.where(F.col("label").isNotNull()).select("id", "label")
         gathered = graph.gather(labeled, ["label"])
         votes = (
@@ -345,7 +334,7 @@ def seeded_label_propagation(
             .agg(F.max(F.struct(F.col("w"), (-F.col("label")).alias("nl"))).alias("b"))
             .select("id", (-F.col("b.nl")).alias("new_label"))
         )
-        new_state = truncate(
+        return (
             state.select("id", "seed_label", F.col("label").alias("old_label"))
             .join(best.hint("shuffle_hash"), "id", "left")
             .select(
@@ -356,6 +345,6 @@ def seeded_label_propagation(
                 ).alias("label"),
             )
         )
-        release(state)
-        state = new_state
-    return state.select("id", "label")
+
+    final = run_supersteps(state, step, lambda new: {}, lambda m: False, rounds)
+    return carry(final.select("id", "label"), final)

@@ -41,7 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from kaminpar_spark.graph import GraphFrame
-from kaminpar_spark.plans.lineage import release, truncate
+from kaminpar_spark.plans.lineage import carry, release, truncate
+from kaminpar_spark.plans.superstep import run_supersteps
 
 
 def louvain_move_step(
@@ -151,13 +152,8 @@ def louvain_level(
     def converged(m: dict) -> bool:
         return False
 
-    from kaminpar_spark.plans.superstep import run_in_memory
-
-    if runner is not None:
-        final = runner.run(name, state, step, metrics, converged, rounds * 2)
-    else:
-        final = run_in_memory(state, step, metrics, converged, rounds * 2)
-    return final.select("id", "comm")
+    final = run_supersteps(state, step, metrics, converged, rounds * 2, runner, name)
+    return carry(final.select("id", "comm"), final)
 
 
 def louvain(

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from kaminpar_spark.graph import GraphFrame
+from kaminpar_spark.plans.lineage import carry
+from kaminpar_spark.plans.superstep import run_supersteps
 
 
 def init_ranks(
@@ -126,7 +128,6 @@ def pagerank(
 ) -> DataFrame:
     """Run to convergence; returns (id, rank). With a SuperstepRunner the loop
     is durable + resumable; otherwise in-memory with truncated lineage."""
-    from kaminpar_spark.plans.superstep import run_in_memory
 
     n = graph.num_nodes()
     state = init_ranks(graph, n, weighted=weighted, warm_start=warm_start)
@@ -156,11 +157,10 @@ def pagerank(
         def converged(m: dict) -> bool:
             return m["residual_l1"] < tol
 
-    if runner is not None:
-        final = runner.run("pagerank", state, step, metrics, converged, max_iters)
-    else:
-        final = run_in_memory(state, step, metrics, converged, max_iters, on_metrics)
-    return final.select("id", "rank")
+    final = run_supersteps(
+        state, step, metrics, converged, max_iters, runner, "pagerank", on_metrics
+    )
+    return carry(final.select("id", "rank"), final)
 
 
 def personalized_pagerank(
@@ -178,7 +178,6 @@ def personalized_pagerank(
 
     ``source_ids`` is a list of node ids or a (id) DataFrame (broadcast-joined
     once at init — source sets are small by use-case)."""
-    from kaminpar_spark.plans.superstep import run_in_memory
 
     n = graph.num_nodes()
     spark = graph.nodes.sparkSession
@@ -241,8 +240,5 @@ def personalized_pagerank(
     def converged(m: dict) -> bool:
         return bool(m) and m["residual_l1"] < tol
 
-    if runner is not None:
-        final = runner.run("ppr", state, step, metrics, converged, max_iters)
-    else:
-        final = run_in_memory(state, step, metrics, converged, max_iters)
-    return final.select("id", "rank")
+    final = run_supersteps(state, step, metrics, converged, max_iters, runner, "ppr")
+    return carry(final.select("id", "rank"), final)

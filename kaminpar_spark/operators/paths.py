@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from kaminpar_spark.graph import GraphFrame
+from kaminpar_spark.plans.lineage import carry
+from kaminpar_spark.plans.superstep import run_supersteps
 
 
 def relax_step(graph: GraphFrame, state: DataFrame, weighted: bool) -> DataFrame:
@@ -69,8 +71,6 @@ def distances(
 
     ``sources`` is a list of node ids or an (id) DataFrame (broadcast onto the
     node table at init — source sets are small by use-case)."""
-    from kaminpar_spark.plans.superstep import run_in_memory
-
     spark = graph.nodes.sparkSession
     if isinstance(sources, DataFrame):
         src_df = sources.select("id")
@@ -96,11 +96,8 @@ def distances(
     def converged(m: dict) -> bool:
         return m["moved"] == 0
 
-    if runner is not None:
-        final = runner.run("distances", state, step, metrics, converged, max_hops)
-    else:
-        final = run_in_memory(state, step, metrics, converged, max_hops)
-    return final.where(F.col("dist").isNotNull()).select("id", "dist")
+    final = run_supersteps(state, step, metrics, converged, max_hops, runner, "distances")
+    return carry(final.where(F.col("dist").isNotNull()).select("id", "dist"), final)
 
 
 def bfs_levels(graph: GraphFrame, sources, max_hops: int = 20, runner=None) -> DataFrame:
@@ -117,8 +114,6 @@ def multi_source_distances(
     callers keep the source set bounded (sampled centrality estimators).
 
     Same hop-bounded min-relaxation semantics as ``distances``."""
-    from kaminpar_spark.plans.superstep import run_in_memory
-
     spark = graph.nodes.sparkSession
     if isinstance(sources, DataFrame):
         src_df = sources.select(F.col("id").alias("src"))
@@ -163,11 +158,8 @@ def multi_source_distances(
     def converged(m: dict) -> bool:
         return m["moved"] == 0
 
-    if runner is not None:
-        final = runner.run("ms_distances", state, step, metrics, converged, max_hops)
-    else:
-        final = run_in_memory(state, step, metrics, converged, max_hops)
-    return final.where(F.col("dist").isNotNull()).select("src", "id", "dist")
+    final = run_supersteps(state, step, metrics, converged, max_hops, runner, "ms_distances")
+    return carry(final.where(F.col("dist").isNotNull()).select("src", "id", "dist"), final)
 
 
 def harmonic_centrality(

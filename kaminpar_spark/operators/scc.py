@@ -34,8 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from kaminpar_spark.plans.lineage import release, truncate
-from kaminpar_spark.plans.superstep import run_in_memory
+from kaminpar_spark.plans.lineage import carry, release, truncate
+from kaminpar_spark.plans.superstep import run_supersteps
 
 
 def _min_reach_labels(
@@ -86,8 +86,8 @@ def _min_reach_labels(
         ).first()["mv"]
         return {"moved": int(moved or 0)}
 
-    final = run_in_memory(state, step, metrics, lambda m: m["moved"] == 0, max_iters)
-    return final.select("id", "lab")
+    final = run_supersteps(state, step, metrics, lambda m: m["moved"] == 0, max_iters)
+    return carry(final.select("id", "lab"), final)
 
 
 def strongly_connected_components(
@@ -210,8 +210,9 @@ def condensation_levels(edges: DataFrame, max_iters: int = 100) -> DataFrame:
     dag, scc = condensation(edges)
     dag = truncate(dag)
     cnodes = truncate(scc.select(F.col("scc").alias("id")).distinct())
-    state = truncate(cnodes.select("id", F.lit(0).cast("long").alias("lev")))
-    for _ in range(max_iters):
+    moved: list[int] = []
+
+    def step(state: DataFrame, i: int) -> DataFrame:
         upd = (
             dag.join(
                 state.select(F.col("id").alias("src"), "lev").hint("shuffle_hash"),
@@ -220,7 +221,7 @@ def condensation_levels(edges: DataFrame, max_iters: int = 100) -> DataFrame:
             .groupBy(F.col("dst").alias("id"))
             .agg((F.max("lev") + 1).alias("nlev"))
         )
-        new = truncate(
+        return (
             state.select("id", F.col("lev").alias("old_lev"))
             .join(upd.hint("shuffle_hash"), "id", "left")
             .select(
@@ -231,23 +232,30 @@ def condensation_levels(edges: DataFrame, max_iters: int = 100) -> DataFrame:
                 "old_lev",
             )
         )
-        moved = new.agg(
-            F.sum((F.col("lev") != F.col("old_lev")).cast("int")).alias("m")
-        ).first()["m"]
-        release(state)
-        state = new
-        if not moved:
-            break
-    else:
+
+    def metrics(new: DataFrame) -> dict:
+        m = new.agg(F.sum((F.col("lev") != F.col("old_lev")).cast("int")).alias("m"))
+        return {"moved": m.first()["m"] or 0}
+
+    def converged(m: dict) -> bool:
+        moved.append(m["moved"])
+        return m["moved"] == 0
+
+    state = run_supersteps(
+        cnodes.select("id", F.lit(0).cast("long").alias("lev")), step, metrics, converged,
+        max_iters,
+    )
+    if not moved or moved[-1] != 0:
         raise RuntimeError(
             "condensation_levels: no fixpoint within max_iters — input "
             "edges are not a DAG after condensation (should be impossible)"
         )
     sizes = scc.groupBy("scc").agg(F.count("*").alias("n_members"))
-    return sizes.join(
+    out = sizes.join(
         state.select(F.col("id").alias("scc"), F.col("lev").alias("level")),
         "scc",
     ).select("scc", "n_members", "level")
+    return carry(out, state)
 
 
 def _directed_reach(dedges: DataFrame, seeds: DataFrame, max_rounds: int = 100) -> DataFrame:

@@ -31,7 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from kaminpar_spark.plans.lineage import truncate
+from kaminpar_spark.plans.lineage import carry, truncate
+from kaminpar_spark.plans.superstep import run_supersteps
 
 
 def earliest_arrival(
@@ -93,14 +94,9 @@ def earliest_arrival(
     def converged(m: dict) -> bool:
         return m["improved"] == 0
 
-    from kaminpar_spark.plans.superstep import run_in_memory
-
-    if runner is not None:
-        final = runner.run(name, state, step, metrics, converged, rounds)
-    else:
-        final = run_in_memory(state, step, metrics, converged, rounds)
-    return final.where(F.col("arr").isNotNull()).select(
-        "id", F.col("arr").alias("arrival")
+    final = run_supersteps(state, step, metrics, converged, rounds, runner, name)
+    return carry(
+        final.where(F.col("arr").isNotNull()).select("id", F.col("arr").alias("arrival")), final
     )
 
 

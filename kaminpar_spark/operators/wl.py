@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from kaminpar_spark.graph import GraphFrame
+from kaminpar_spark.plans.lineage import carry, release, truncate
+from kaminpar_spark.plans.superstep import run_supersteps
 
 WL_MOD = 2147483647  # 2^31 - 1 (same cross-engine modulus family as hashing)
 WL_A = 1000003  # neighbor-label pre-hash multiplier
@@ -85,8 +87,6 @@ def wl_refine(
     fixpoint partition relabels injectively), so the runner path still runs
     the full ``rounds`` unless the labels are literally unchanged — which
     IS the modular fixpoint."""
-    from kaminpar_spark.plans.superstep import run_in_memory
-
     def step(s: DataFrame, i: int) -> DataFrame:
         cur = s.select("id", "wl")
         new = wl_round(graph, cur)
@@ -106,25 +106,22 @@ def wl_refine(
     def converged(m: dict) -> bool:
         return runner is not None and m.get("changed") == 0
 
-    init = wl_init(graph)
-    if runner is not None:
-        final = runner.run(name, init, step, metrics, converged, rounds)
-    else:
-        final = run_in_memory(init, step, metrics, converged, rounds)
-    return final.select("id", "wl")
+    final = run_supersteps(wl_init(graph), step, metrics, converged, rounds, runner, name)
+    return carry(final.select("id", "wl"), final)
 
 
 def wl_class_counts(graph: GraphFrame, rounds: int = 2) -> list[int]:
     """Number of distinct structural classes after each round 0..rounds —
     non-decreasing (refinement only splits classes, modulo hash collisions);
     the fixpoint count is the graph's 1-WL color count."""
-    from kaminpar_spark.plans.lineage import release, truncate
+    def classes(s: DataFrame) -> dict:
+        return {"classes": s.select("wl").distinct().count()}
 
-    state = truncate(wl_init(graph))
-    out = [state.select("wl").distinct().count()]
-    for _ in range(rounds):
-        new_state = truncate(wl_round(graph, state))
-        release(state)
-        state = new_state
-        out.append(state.select("wl").distinct().count())
+    init = truncate(wl_init(graph))
+    out = [classes(init)["classes"]]
+    final = run_supersteps(
+        init, lambda s, i: wl_round(graph, s), classes, lambda m: False, rounds,
+        on_metrics=lambda i, m: out.append(m["classes"]), truncate_init=False,
+    )
+    release(final)
     return out

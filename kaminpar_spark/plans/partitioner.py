@@ -49,7 +49,8 @@ from kaminpar_spark.plans.initial import (
     recursive_bisect,
     repair_kway,
 )
-from kaminpar_spark.plans.lineage import truncate
+from kaminpar_spark.plans.lineage import release, truncate
+from kaminpar_spark.plans.superstep import run_supersteps
 
 
 def extension_plan(
@@ -527,14 +528,23 @@ class Partitioner:
         state = part.join(g.nodes.select("id", "weight"), "id").select(
             "id", F.col("block").cast("long").alias("label"), "weight"
         )
-        state = truncate(state)
-        for i in range(self.refine_iters):
-            new = lp_step(g, state, step_idx=i, hard_caps=caps, semi_sync=True)
-            new = truncate(new)
-            moved = new.agg(F.sum("moved")).first()[0] or 0
-            state = new.select("id", "label", "weight")
-            if moved == 0 and i > 0:
-                break
-        refined = state.select("id", F.col("label").cast("int").alias("block"))
-        return balance(g, refined, cap_list, max_rounds=5, k=k)
+
+        def step(s: DataFrame, i: int) -> DataFrame:
+            s = s.select("id", "label", "weight")
+            return lp_step(g, s, step_idx=i, hard_caps=caps, semi_sync=True)
+
+        def metrics(new: DataFrame) -> dict:
+            return {"moved": new.agg(F.sum("moved")).first()[0] or 0}
+
+        quiet: list[bool] = []
+
+        def converged(m: dict) -> bool:  # a quiet step after the first
+            quiet.append(m["moved"] == 0)
+            return len(quiet) > 1 and quiet[-1]
+
+        final = run_supersteps(state, step, metrics, converged, self.refine_iters)
+        refined = final.select("id", F.col("label").cast("int").alias("block"))
+        out = balance(g, refined, cap_list, max_rounds=5, k=k)
+        release(final)  # balance starts from its own truncate of ``refined``
+        return out
 

@@ -166,7 +166,7 @@ def transcript_graph(
     orders ids by actor key (single-partition sort; oracle/test scale only);
     default uses the scalable two-level dense-id scheme.
     """
-    from kaminpar_spark.plans.lineage import truncate
+    from kaminpar_spark.plans.lineage import carry, truncate
 
     # Materialize the link pairs ONCE: the lag-window + synth subtree feeds
     # three downstream executions (the dense-id key pass, the src/dst joins
@@ -185,8 +185,10 @@ def transcript_graph(
     # amap is referenced twice below (src and dst sides). Materialize it:
     # joining two copies of the unmaterialized mapInPandas subtree is both
     # wasteful and exposed an AQE self-join wrong-result (rows silently lost,
-    # partition-count dependent edge counts at bench scale).
-    amap = truncate(amap)
+    # partition-count dependent edge counts at bench scale). It carries the
+    # links' and the dense-id keys' checkpoints too, so that ``release(amap)``
+    # once the graph is prepared frees every block this ETL pinned.
+    amap = carry(truncate(amap), amap, links)
     pairs = (
         links.join(amap.withColumnRenamed("actor", "a_src").withColumnRenamed("id", "src"), "a_src")
         .join(amap.withColumnRenamed("actor", "a_dst").withColumnRenamed("id", "dst"), "a_dst")
@@ -234,7 +236,7 @@ def transcript_digraph(
     transcript_graph this keeps the turn DIRECTION (prev actor -> next
     actor), the input for directed link analysis (HITS: who initiates vs who
     responds). Same two-level dense ids, same materialized mapping."""
-    from kaminpar_spark.plans.lineage import truncate
+    from kaminpar_spark.plans.lineage import carry, truncate
 
     # same once-not-thrice materialization as transcript_graph
     links = truncate(turn_links(transcripts, n_convs))
@@ -245,7 +247,7 @@ def transcript_digraph(
         amap = dense_ids_by_order(actors, "actor", out="id")
     else:
         amap = dense_ids(actors, "actor", num_partitions=num_partitions, out="id")
-    amap = truncate(amap)
+    amap = carry(truncate(amap), amap, links)  # see transcript_graph
     edges = (
         links.join(amap.withColumnRenamed("actor", "a_src").withColumnRenamed("id", "src"), "a_src")
         .join(amap.withColumnRenamed("actor", "a_dst").withColumnRenamed("id", "dst"), "a_dst")

@@ -38,20 +38,17 @@ def test_superstep_runner_still_resumes(spark, tmp_path):
     """Snapshot IO now routes through the adapter; resume must still work."""
     from pyspark.sql import functions as F
 
-    from kaminpar_spark.plans.superstep import SuperstepRunner
+    from kaminpar_spark.plans.superstep import SuperstepRunner, run_supersteps
 
     runner = SuperstepRunner(spark, str(tmp_path))
     init = spark.range(5).select("id", F.lit(0).alias("v"))
     step = lambda st, i: st.withColumn("v", F.col("v") + 1)  # noqa: E731
     metrics = lambda st: {"maxv": st.agg(F.max("v")).first()[0]}  # noqa: E731
-    out = runner.run(
-        "t", init, step, metrics, converged=lambda m: m["maxv"] >= 3, max_iters=10
-    )
+    converged = lambda m: m["maxv"] >= 3  # noqa: E731
+    out = run_supersteps(init, step, metrics, converged, 10, runner, "t")
     assert out.agg(F.max("v")).first()[0] == 3
     # resume: converged manifest line short-circuits, same state back
-    out2 = runner.run(
-        "t", init, step, metrics, converged=lambda m: m["maxv"] >= 3, max_iters=10
-    )
+    out2 = run_supersteps(init, step, metrics, converged, 10, runner, "t")
     assert out2.agg(F.max("v")).first()[0] == 3
     steps = [r["step"] for r in runner.completed_steps("t")]
     assert steps == sorted(set(steps)), "resume replayed a completed step"

@@ -1,14 +1,16 @@
 """Iterative loops must not accumulate checkpoint generations.
 
-Every ad-hoc round loop (outside SuperstepRunner, which diff-releases
-automatically) releases the superseded generation once its successor is
-materialized; otherwise `rounds` copies of O(n) state pile up in the block
-manager — unbounded storage growth for to-fixpoint loops (core_numbers
-runs up to 100 rounds), with eviction/GC pressure on long runs. The
-discipline is structural (bounded generations regardless of round count);
-its wall-clock effect at bench sizes is within host run variance and is
-not claimed as measured (BENCH/BPE_SCALING.md sweep). These tests pin the
-bounded-block-count property.
+Every superstep loop (``plans.superstep.run_supersteps``, in memory or
+durable) releases the superseded generation and the step's own
+intermediates once its successor is materialized, and a loop-based
+operator's result carries its final state's checkpoint ids, so that
+``release(result)`` frees them. Without this, `rounds` copies of O(n) state
+pile up in the block manager — unbounded storage growth for to-fixpoint
+loops (core_numbers runs up to 100 rounds), with eviction/GC pressure on
+long runs. The discipline is structural (bounded generations regardless
+of round count); its wall-clock effect at bench sizes is within host run
+variance and is not claimed as measured (BENCH/BPE_SCALING.md sweep).
+These tests pin the bounded-block-count property.
 """
 
 from __future__ import annotations
@@ -107,3 +109,59 @@ def test_staging_checkpoint_blocks_are_releasable(spark):
     assert _n_persistent(spark) > before
     release(df)
     assert _n_persistent(spark) == before
+
+
+def _leaves_only_result(spark, call):
+    """Run ``call``; the only new persistent RDDs are the result's, and
+    releasing the result returns the block manager to where it started."""
+    from kaminpar_spark.plans.lineage import persistent_rdd_ids, release
+
+    before = persistent_rdd_ids(spark)
+    out = call()
+    out.count()
+    left = persistent_rdd_ids(spark) - before
+    assert left <= getattr(out, "_kaminpar_chk_ids", set()), left
+    release(out)
+    assert not persistent_rdd_ids(spark) - before
+
+
+def test_label_propagation_leaves_only_its_result(spark):
+    from kaminpar_spark.operators.labelprop import label_propagation
+
+    g = _ring_with_clique(spark)
+    _leaves_only_result(spark, lambda: label_propagation(g, max_iters=1, max_cluster_weight=4))
+
+
+def test_in_memory_pagerank_leaves_only_its_result(spark):
+    from kaminpar_spark.operators.pagerank import pagerank
+
+    g = _ring_with_clique(spark)
+    _leaves_only_result(spark, lambda: pagerank(g, tol=0.0, max_iters=1))
+
+
+def test_refine_and_balance_leave_only_their_result(spark):
+    """``Partitioner._refine`` runs an LP refinement loop, then a
+    ``balance`` round (the lopsided 30/16 split is still over the cap of 24
+    after refinement)."""
+    from kaminpar_spark.plans.partitioner import Partitioner
+
+    g = _ring_with_clique(spark)
+    lopsided = g.nodes.select("id", (F.col("id") >= 30).cast("int").alias("block"))
+    p = Partitioner(g, refine_iters=1)
+    _leaves_only_result(spark, lambda: p._refine(g, lopsided, 2, 24))
+
+
+def test_transcript_graph_checkpoints_release_with_actor_map(spark):
+    """The ETL's link and dense-id key checkpoints ride on the returned
+    actor map: after ``prepare`` and ``unpersist``, ``release(amap)``
+    leaves the block manager where it started."""
+    from kaminpar_spark.plans.lineage import persistent_rdd_ids, release
+    from kaminpar_spark.sources.transcripts import synth_transcripts, transcript_graph
+
+    before = persistent_rdd_ids(spark)
+    g, amap = transcript_graph(synth_transcripts(spark, 20), 20, num_partitions=2)
+    gp = g.prepare(num_partitions=2)
+    gp.unpersist()
+    assert len(amap._kaminpar_chk_ids) == 3
+    release(amap)
+    assert not persistent_rdd_ids(spark) - before

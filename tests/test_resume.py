@@ -56,27 +56,20 @@ def test_converged_run_short_circuits(spark, tmp_path):
     assert len(runner.completed_steps("connected_components")) == n_before
 
 
-def test_checkpoint_every_k(spark, tmp_path):
-    g, _, _ = fixtures.erdos_renyi(spark, n=200, p=0.03, seed=2, hub_overlay=0)
-    runner = SuperstepRunner(spark, str(tmp_path), checkpoint_every=3)
-    pagerank(g, tol=0.0, max_iters=7, runner=runner)
-    recs = runner.completed_steps("pagerank")
-    durable = [r["step"] for r in recs if r["durable"]]
-    assert 0 in durable and 3 in durable and 6 in durable  # every 3rd + last
-
-
 def test_durable_runner_releases_superseded_checkpoints(spark, tmp_path):
-    """Non-durable steps (checkpoint_every=2) are in-memory checkpoints;
-    once superseded they, and the initial state's checkpoint, are released,
-    so the run leaves at most the final state's blocks behind."""
+    """A durable run truncates its initial state before the first step; once
+    superseded, that checkpoint is released, so the run leaves at most the
+    final state's blocks behind. ``on_metrics`` gets one call per durable
+    step, with the manifest's step indices."""
     from kaminpar_spark.plans.lineage import persistent_rdd_ids
 
     g, _, _ = fixtures.erdos_renyi(spark, n=120, p=0.04, seed=3, hub_overlay=0)
-    runner = SuperstepRunner(spark, str(tmp_path), checkpoint_every=2)
+    runner = SuperstepRunner(spark, str(tmp_path))
+    calls = []
     before = persistent_rdd_ids(spark)
-    ranks = pagerank(g, tol=0.0, max_iters=5, runner=runner)
+    ranks = pagerank(
+        g, tol=0.0, max_iters=3, runner=runner, on_metrics=lambda i, m: calls.append(i)
+    )
     left = persistent_rdd_ids(spark) - before
-    assert [r["durable"] for r in runner.completed_steps("pagerank")] == [
-        True, False, True, False, True
-    ]
+    assert calls == [r["step"] for r in runner.completed_steps("pagerank")] == [0, 1, 2]
     assert left <= getattr(ranks, "_kaminpar_chk_ids", set()), left
