@@ -15,11 +15,16 @@ numpy plus plain-list CSR loops with heapq, seeded and deterministic:
 - 2-way FM refinement with rollback to the best prefix and a fruitless-move
   stop (initial_refiner.h:162-416)
 - pool: repetitions x algorithms, keep best by (feasible, cut, imbalance)
-  (pool_bipartitioner.h:120-220)
+  (pool_bipartitioner.h:120-220), stopping at a feasible zero cut
+- sequential multilevel bisection (initial_partitioning_facade.h:47-110): LP
+  clustering with favored-cluster pairing of stalled singletons
+  (parallel_label_propagation_coarsener.h:83-114) down to ~20 nodes, the
+  pool on the coarsest graph under the caps of the graph being bisected,
+  then projection + FM per level
 - recursive bisection to k with adaptive epsilon per level (helper.cc:87-176,
   context.cc:384-393) and ceil/floor k splitting (utility/math.h:51)
-- a greedy k-way repair (empty blocks, overloads) for a result that no
-  Spark level will balance
+- a greedy k-way repair (empty blocks, overloads) that the partitioner runs
+  on every driver result before a Spark level refines it or it is returned
 """
 
 from __future__ import annotations
@@ -379,19 +384,29 @@ def pool_bipartition(
     ratio: tuple[int, int] = (1, 1),
     adaptive: bool = True,
     min_non_adaptive_reps: int = 5,
+    caps: tuple[float, float] | None = None,
 ) -> np.ndarray:
     """Portfolio + select best (feasible, cut) (pool_bipartitioner.h:120-220,
     helper.h:77-104). Every candidate is FM-refined before scoring. ``ratio``
     = (k1, k2) sets per-side target weights W*k1/k and W*k2/k (the reference
     bisects toward the final_k split, helper.cc:87-176).
 
+    ``caps`` are the per-side max weights; by default
+    ``bipartition_caps(g, epsilon, ratio)``. The coarsest graph of a
+    multilevel bisection passes the caps of the graph being bisected: caps
+    recomputed from the coarse graph would take the largest cluster weight
+    as their slack, and a result within them can overload the input.
+
     ``adaptive=True`` mirrors use_adaptive_bipartitioner_selection: after
     ``min_non_adaptive_reps`` runs, a bipartitioner only runs again while it
     is statistically likely to beat the best cut — variance > ((mean -
-    best_cut)/2)^2 (pool_bipartitioner.h:149-153)."""
+    best_cut)/2)^2 (pool_bipartitioner.h:149-153). The pool returns as soon
+    as a candidate is feasible with cut 0: no later one can beat it, and the
+    rng is local to the call, so the labels are those of the full loop."""
     if g.n == 0:
         return np.zeros(0, dtype=np.int64)
-    caps = bipartition_caps(g, epsilon, ratio)
+    if caps is None:
+        caps = bipartition_caps(g, epsilon, ratio)
     rng = np.random.default_rng(seed)
     best = None  # ((infeasible, cut), part)
     stats = [_Welford() for _ in _PORTFOLIO]
@@ -419,6 +434,8 @@ def pool_bipartition(
             cand = (infeasible, cut)
             if best is None or cand < best[0]:
                 best = (cand, part)
+                if cand == (0, 0):
+                    return part
     return best[1]
 
 
@@ -539,6 +556,38 @@ def lp_cluster_seq(
     return np.array(leader, dtype=np.int64), moves
 
 
+def pair_singletons(g: SmallGraph, leader: np.ndarray, max_cluster_weight: int) -> np.ndarray:
+    """Favored-cluster singleton pairing, the driver form of the Spark
+    coarsener's ``merge_singleton_clusters``
+    (parallel_label_propagation_coarsener.h:83-114). Every singleton (a
+    cluster of one node) with a neighbor favors the adjacent cluster with the
+    highest rating, ignoring the cap, ties to the smaller id. Within a
+    favored cluster, consecutive singletons in id order form pairs under the
+    smaller id; a pair heavier than ``max_cluster_weight`` stays apart. Other
+    clusters keep their leader, so leader values stay fixpoints."""
+    n = g.n
+    single = np.bincount(leader, minlength=n)[leader] == 1
+    src, c = _sources(g), leader[g.indices]
+    keep = single[src] & (c != src)
+    if not keep.any():
+        return leader
+    key, inv = np.unique(src[keep] * n + c[keep], return_inverse=True)
+    rating = np.bincount(inv, weights=g.eweights[keep])
+    u, c = key // n, key % n
+    order = np.lexsort((c, -rating, u))  # per singleton: best rating, then smallest id
+    first = order[np.r_[True, u[order][1:] != u[order][:-1]]]
+    u, fav = u[first], c[first]
+    order = np.lexsort((u, fav))
+    u, fav = u[order], fav[order]
+    starts = np.r_[True, fav[1:] != fav[:-1]]
+    rank = np.arange(len(u)) - np.maximum.accumulate(np.where(starts, np.arange(len(u)), 0))
+    a = np.nonzero((rank % 2 == 0)[:-1] & (fav[1:] == fav[:-1]))[0]
+    a = a[g.nweights[u[a]] + g.nweights[u[a + 1]] <= max_cluster_weight]
+    out = leader.copy()
+    out[u[a + 1]] = u[a]
+    return out
+
+
 def contract_clustering(g: SmallGraph, leader: np.ndarray) -> tuple[SmallGraph, np.ndarray]:
     """Contract a leader clustering: (coarse graph, node mapping fine->coarse)
     (initial_coarsener.cc:139-267 contract_current_clustering; coarse ids are
@@ -570,26 +619,38 @@ def multilevel_bipartition(
     ~IP_CONTRACTION_LIMIT nodes under the BLOCK_WEIGHT/12 cluster cap
     (compute_max_cluster_weight context.cc:395-416 with the bipartition
     context's k=2), pool-bipartition the coarsest graph, then pop the
-    hierarchy with projection + 2-way FM per level. Falls back to the flat
-    pool result if the multilevel one ends infeasible where flat is better
-    (select_best ordering, helper.h:77-104)."""
+    hierarchy with projection + 2-way FM per level.
+
+    A pass that leaves more than half as many clusters as nodes (the Spark
+    coarsener's trigger) pairs the remaining singletons by favored cluster
+    (``pair_singletons``), so nodes whose only neighbors are full clusters
+    (the leaves of a hub) cannot stall coarsening; the shrink test counts
+    the distinct leaders. The caps of ``g`` bound the coarsest-graph pool and
+    every FM pass. Falls back to the flat pool result if the multilevel one
+    ends infeasible where flat is better (select_best ordering,
+    helper.h:77-104)."""
     if g.n == 0:
         return np.zeros(0, dtype=np.int64)
     rng = np.random.default_rng(seed ^ 0x9E3779B9)
+    caps = bipartition_caps(g, epsilon, ratio)
     max_cw = int(IP_CLUSTER_WEIGHT_MULTIPLIER * (1 + epsilon) * g.total_weight / 2)
     hierarchy: list[tuple[SmallGraph, np.ndarray]] = []
     cur = g
     while cur.n > IP_CONTRACTION_LIMIT:
-        leader, moves = lp_cluster_seq(cur, max_cw, rng)
-        c_n = cur.n - moves
+        leader, _ = lp_cluster_seq(cur, max_cw, rng)
+        c_n = np.count_nonzero(leader == np.arange(cur.n))  # leaders are fixpoints
+        if c_n > cur.n / 2:  # shrank by less than half (coarsener.h:74-76)
+            leader = pair_singletons(cur, leader, max_cw)
+            c_n = np.count_nonzero(leader == np.arange(cur.n))
         if (1.0 - c_n / cur.n) <= IP_CONVERGENCE_THRESHOLD:
             break  # converged: not shrinking (facade coarsen loop, :77-90)
         cg, mapping = contract_clustering(cur, leader)
         hierarchy.append((cur, mapping))
         cur = cg
-    part = pool_bipartition(cur, epsilon, seed=seed, repetitions=repetitions, ratio=ratio)
+    part = pool_bipartition(
+        cur, epsilon, seed=seed, repetitions=repetitions, ratio=ratio, caps=caps
+    )
 
-    caps = bipartition_caps(g, epsilon, ratio)
     for fine, mapping in reversed(hierarchy):
         part = part[mapping]
         part = fm_refine_2way(fine, part, caps, rng=rng)
@@ -597,7 +658,9 @@ def multilevel_bipartition(
     if hierarchy:
         score = bipartition_score(g, part, caps)
         if score[0] > 0:
-            flat = pool_bipartition(g, epsilon, seed=seed, repetitions=repetitions, ratio=ratio)
+            flat = pool_bipartition(
+                g, epsilon, seed=seed, repetitions=repetitions, ratio=ratio, caps=caps
+            )
             if bipartition_score(g, flat, caps) < score:
                 return flat
     return part

@@ -81,6 +81,22 @@ def extension_plan(
     return sub_ks, offs, new_final_ks
 
 
+def small_graph(nodes: pd.DataFrame, edges: pd.DataFrame) -> tuple[SmallGraph, np.ndarray]:
+    """(CSR graph, sorted node ids) from collected (id, weight) node rows and
+    (src, dst, weight) edge rows. Nodes are numbered in id order and edges
+    sorted by (src, dst), so the driver kernels see the same graph whatever
+    row order Spark delivered."""
+    ids = nodes["id"].to_numpy(dtype=np.int64)
+    order = np.argsort(ids)  # sorted on the driver: no Spark sort job
+    ids, nw = ids[order], nodes["weight"].to_numpy(dtype=np.int64)[order]
+    # ids are sorted ascending: searchsorted is the vectorized remap
+    src = np.searchsorted(ids, edges["src"].to_numpy(dtype=np.int64))
+    dst = np.searchsorted(ids, edges["dst"].to_numpy(dtype=np.int64))
+    w = edges["weight"].to_numpy(dtype=np.int64)
+    order = np.lexsort((w, dst, src))
+    return SmallGraph.from_edges(len(ids), src[order], dst[order], w[order], nw), ids
+
+
 def extend_partition(
     graph: GraphFrame,
     part: DataFrame,
@@ -125,17 +141,10 @@ def extend_partition(
     def kernel(key, nodes_pdf: pd.DataFrame, edges_pdf: pd.DataFrame) -> pd.DataFrame:
         b = int(key[0])
         k_b = sub_ks[b]
-        ids = nodes_pdf["id"].to_numpy(dtype=np.int64)
-        if k_b <= 1 or len(ids) == 0:
+        if k_b <= 1 or len(nodes_pdf) == 0:
+            ids = nodes_pdf["id"].to_numpy(dtype=np.int64)
             return pd.DataFrame({"id": ids, "block": np.full(len(ids), offs[b], dtype=np.int32)})
-        nw = nodes_pdf["weight"].to_numpy(dtype=np.int64)
-        order = np.argsort(ids)
-        ids, nw = ids[order], nw[order]
-        remap_idx = np.searchsorted(ids, edges_pdf["src"].to_numpy(dtype=np.int64))
-        remap_dst = np.searchsorted(ids, edges_pdf["dst"].to_numpy(dtype=np.int64))
-        sub = SmallGraph.from_edges(
-            len(ids), remap_idx, remap_dst, edges_pdf["weight"].to_numpy(dtype=np.int64), nw
-        )
+        sub, ids = small_graph(nodes_pdf, edges_pdf)
         labels = recursive_bisect(
             sub, k_b, epsilon, seed=seed + b,
             k_final=k_final, total_weight_root=total_weight_root,
@@ -254,12 +263,16 @@ class Partitioner:
     # ------------------------------------------------------------- pipeline
     def partition(self, k: int, epsilon: float = 0.03) -> PartitionResult:
         g = self.graph
-        row = g.nodes.agg(
-            F.count("*").alias("n"), F.sum("weight").alias("w"), F.max("weight").alias("mx")
-        ).first()
-        n, total_w, max_node_w = row["n"], row["w"] or 0, row["mx"] or 0
         m = g.num_half_edges()
-        cap = rules.max_block_weight(total_w, k, epsilon, max_node_w)
+        if m > self.IN_MEMORY_HALF_EDGES:
+            row = g.nodes.agg(
+                F.count("*").alias("n"), F.sum("weight").alias("w"), F.max("weight").alias("mx")
+            ).first()
+            n, total_w, max_node_w = row["n"], row["w"] or 0, row["mx"] or 0
+        else:
+            # no Spark level can run: the collect below supplies W and the
+            # max node weight, so the first Spark work is the collect itself
+            n = g.num_nodes()
         levels: list[dict] = []
 
         # ---- coarsen (Spark, above the in-memory budget only) ----
@@ -368,6 +381,17 @@ class Partitioner:
             else k
         )
         sg, ids = self._collect_small(g, n, m)
+        if not hierarchy:
+            total_w, max_node_w = sg.total_weight, int(sg.nweights.max(initial=0))
+        cap = rules.max_block_weight(total_w, k, epsilon, max_node_w)
+
+        # per-block caps follow final_k shares (context.cc:114-130)
+        def caps_for(fks: list[int]) -> list[int]:
+            return [
+                rules.max_block_weight_final_k(total_w, k, fkb, epsilon, max_node_w)
+                for fkb in fks
+            ]
+
         labels = best_of_bisections(
             sg, k0, epsilon,
             seeds=[self.seed + 7919 * r for r in range(self.ip_replications)],
@@ -376,10 +400,10 @@ class Partitioner:
         cur_k = k0
         # per-block final-block bookkeeping (graph_utils.cc:43-60)
         final_ks = rules.fill_final_k(k0, k)
-        if not hierarchy:
-            # the collected graph IS the input graph: no Spark level follows
-            # to balance it, so repair overloads and empty blocks here
-            labels = repair_kway(sg, labels, np.full(k, cap, dtype=np.int64))
+        # repair overloads and empty blocks under the caps the next level
+        # refines under: Spark's LP refine and balancer turn even a small
+        # overload of a coarse block into a much larger cut
+        labels = repair_kway(sg, labels, np.array(caps_for(final_ks), dtype=np.int64))
         # Arrow-batched push-back, not a Python row list
         part = self.spark.createDataFrame(
             pd.DataFrame({"id": ids, "block": labels.astype(np.int32)}),
@@ -405,13 +429,6 @@ class Partitioner:
                 partition=part, k=k, epsilon=epsilon, cut=cut,
                 imbalance=imbalance, feasible=bool(bw.max() <= cap), levels=levels,
             )
-
-        # per-block caps follow final_k shares (context.cc:114-130)
-        def caps_for(fks: list[int]) -> list[int]:
-            return [
-                rules.max_block_weight_final_k(total_w, k, fkb, epsilon, max_node_w)
-                for fkb in fks
-            ]
 
         # ---- uncoarsen + (extend) + refine ----
         for li in range(len(hierarchy) - 1, -1, -1):
@@ -475,13 +492,16 @@ class Partitioner:
     MAX_COLLECT_HALF_EDGES = 64_000_000
     # In-memory budget of the hybrid tail: coarsening runs in Spark only
     # while a level has more half-edges than this; the level it stops at is
-    # partitioned on the driver (plans/initial.py). Set at the measured
+    # partitioned on the driver (plans/initial.py). Set at the measured time
     # crossover on a 4-core host, sf0.1 transcript graph, C=400, k=16, 3
-    # seeds: the driver tail costs ~0.21 ms per half-edge (109 s on the
-    # whole 472,598-half-edge graph, 49 s on its 238,944-half-edge first
-    # coarse level) and one Spark level (coarsen + uncoarsen) 22-36 s, so
-    # the two break even near 240k. End to end that run took 85 s with this
-    # budget (one Spark level), 110 s all in memory, 189 s all in Spark.
+    # seeds, when the driver bisection cost ~0.21 ms per half-edge and one
+    # Spark level (coarsen + uncoarsen) 22-36 s. Since each driver
+    # bisection coarsens to a few dozen nodes it costs ~0.01 ms per
+    # half-edge (4.9-6.1 s on the whole 472,598-half-edge graph, 1.7 s on
+    # its 238,944-half-edge first coarse level, against 30 s before), so
+    # time no longer sets the budget. It stays because the one Spark level
+    # it keeps at sf0.1 buys cut: 653,732 end to end (26 s) against 679,025
+    # bisecting the whole graph on the driver.
     IN_MEMORY_HALF_EDGES = 250_000
 
     def _collect_small(
@@ -507,16 +527,10 @@ class Partitioner:
                 "ceiling instead of collecting a distributed graph to the driver"
             )
         # Arrow-batched transfers (toPandas), not Python Row lists
-        nodes = g.nodes.select("id", "weight").toPandas()
-        ids = nodes["id"].to_numpy(dtype=np.int64)
-        order = np.argsort(ids)  # sorted on the driver: no Spark sort job
-        ids, nw = ids[order], nodes["weight"].to_numpy(dtype=np.int64)[order]
-        edges = g.edges.select("src", "dst", "weight").toPandas()
-        # ids are sorted ascending: searchsorted is the vectorized remap
-        src = np.searchsorted(ids, edges["src"].to_numpy(dtype=np.int64))
-        dst = np.searchsorted(ids, edges["dst"].to_numpy(dtype=np.int64))
-        w = edges["weight"].to_numpy(dtype=np.int64)
-        return SmallGraph.from_edges(len(ids), src, dst, w, nw), ids
+        return small_graph(
+            g.nodes.select("id", "weight").toPandas(),
+            g.edges.select("src", "dst", "weight").toPandas(),
+        )
 
     def _refine(
         self, g: GraphFrame, part: DataFrame, k: int, cap: int | list[int]

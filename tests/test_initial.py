@@ -6,14 +6,19 @@ import itertools
 
 import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from kaminpar_spark.plans.initial import (
     SmallGraph,
     bipartition_bfs,
+    bipartition_caps,
     bipartition_ggg,
     bipartition_random,
+    bipartition_score,
     cut_of,
     fm_refine_2way,
+    lp_cluster_seq,
+    pair_singletons,
     pool_bipartition,
     recursive_bisect,
 )
@@ -216,3 +221,134 @@ def test_repair_kway_fills_empty_blocks_and_overloads():
     assert bw.max() <= 4 and (bw > 0).all()
     feasible = np.repeat([0, 1, 2], 4)
     assert (repair_kway(g, feasible, caps) == feasible).all()  # left unchanged
+
+
+# ---- stalled-singleton pairing, input caps, pool early exit -----------------
+
+
+def _favored(g, leader, u):
+    """Plain-loop oracle: the adjacent cluster with the highest rating, ties
+    to the smaller id (None for a node without neighbors)."""
+    ratings = {}
+    for j in range(g.indptr[u], g.indptr[u + 1]):
+        c = int(leader[g.indices[j]])
+        if c != u:
+            ratings[c] = ratings.get(c, 0) + int(g.eweights[j])
+    return min(ratings, key=lambda c: (-ratings[c], c)) if ratings else None
+
+
+@st.composite
+def clustered_graph(draw):
+    """(graph, LP leader array, cluster cap) with n <= 40."""
+    n = draw(st.integers(min_value=2, max_value=40))
+    raw = draw(
+        st.lists(
+            st.tuples(st.integers(0, n - 1), st.integers(0, n - 1), st.integers(1, 5)),
+            max_size=3 * n,
+        )
+    )
+    und = {(min(u, v), max(u, v)): w for u, v, w in raw if u != v}
+    src = np.array([u for u, v in und] + [v for u, v in und], dtype=np.int64)
+    dst = np.array([v for u, v in und] + [u for u, v in und], dtype=np.int64)
+    ew = np.array(list(und.values()) * 2, dtype=np.int64)
+    nw = np.array(draw(st.lists(st.integers(1, 6), min_size=n, max_size=n)))
+    g = SmallGraph.from_edges(n, src, dst, ew, nw)
+    lp_cap = draw(st.integers(1, 20))
+    leader, _ = lp_cluster_seq(g, lp_cap, np.random.default_rng(draw(st.integers(0, 99))))
+    return g, leader, draw(st.integers(1, 12))
+
+
+@settings(max_examples=60, deadline=None, derandomize=True)
+@given(case=clustered_graph())
+def test_pair_singletons_properties(case):
+    g, leader, max_cw = case
+    out = pair_singletons(g, leader, max_cw)
+    assert np.array_equal(out[out], out)  # leaders stay fixpoints
+    single = np.bincount(leader, minlength=g.n)[leader] == 1
+    assert np.array_equal(out[~single], leader[~single])  # clusters keep their leader
+    sizes = np.bincount(out, minlength=g.n)
+    for u in np.nonzero(out != leader)[0].tolist():
+        a = int(out[u])
+        assert single[a] and a < u and sizes[a] == 2
+        assert g.nweights[a] + g.nweights[u] <= max_cw
+        fav = _favored(g, leader, u)
+        assert fav is not None and fav == _favored(g, leader, a)
+
+
+def hub_and_leaves(leaves: int = 300) -> SmallGraph:
+    """Node 0 adjacent to every leaf; each leaf also links to the next one
+    in runs of three, unit weights. The hub's cluster fills up after a few
+    leaves join it, and the remaining leaves neighbor only full clusters."""
+    und = [(0, v) for v in range(1, leaves + 1)]
+    und += [(v, v + 1) for v in range(1, leaves) if v % 3 != 0]
+    und = np.array(und)
+    src = np.concatenate([und[:, 0], und[:, 1]])
+    dst = np.concatenate([und[:, 1], und[:, 0]])
+    n = leaves + 1
+    return SmallGraph.from_edges(
+        n, src, dst, np.ones(len(src), dtype=np.int64), np.ones(n, dtype=np.int64)
+    )
+
+
+def test_hub_and_leaves_coarsening_does_not_stall(monkeypatch):
+    from kaminpar_spark.plans import initial
+    from kaminpar_spark.plans.initial import IP_CONTRACTION_LIMIT, multilevel_bipartition
+
+    pooled = []
+    pool = initial.pool_bipartition
+
+    def recording_pool(g, *args, **kwargs):
+        pooled.append(g.n)
+        return pool(g, *args, **kwargs)
+
+    monkeypatch.setattr(initial, "pool_bipartition", recording_pool)
+    g = hub_and_leaves()
+    part = multilevel_bipartition(g, epsilon=0.03, seed=42)
+    # one pool call, on a coarsest graph below 2x the contraction limit: the
+    # flat fallback on all 301 nodes did not fire
+    assert len(pooled) == 1 and pooled[0] < 2 * IP_CONTRACTION_LIMIT, pooled
+    caps = bipartition_caps(g, 0.03)
+    assert bipartition_score(g, part, caps)[0] == 0
+
+
+def _full_pool_loop(g, epsilon, seed, repetitions=4):
+    """pool_bipartition without the early exit (repetitions below
+    min_non_adaptive_reps, so no candidate is skipped)."""
+    from kaminpar_spark.plans.initial import _PORTFOLIO
+
+    caps = bipartition_caps(g, epsilon)
+    rng = np.random.default_rng(seed)
+    best = None
+    for _ in range(repetitions):
+        for _, algo in _PORTFOLIO:
+            part = fm_refine_2way(g, algo(g, caps, rng), caps, rng=rng)
+            bw = np.bincount(part, weights=g.nweights, minlength=2)
+            infeasible = int(max(0, bw[0] - caps[0]) + max(0, bw[1] - caps[1]))
+            if g.n >= 2 and (bw[0] == 0 or bw[1] == 0):
+                infeasible += g.total_weight
+            cand = (infeasible, cut_of(g, part))
+            if best is None or cand < best[0]:
+                best = (cand, part)
+    return best[1]
+
+
+@pytest.mark.parametrize("make", [
+    lambda: SmallGraph.from_edges(
+        64, np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64),
+        np.zeros(0, dtype=np.int64), np.ones(64, dtype=np.int64),
+    ),
+    lambda: planted_two_cliques(12),  # cut 1 at best: the pool runs to the end
+    lambda: ring(30),
+])
+def test_pool_early_exit_matches_full_loop(make, monkeypatch):
+    from kaminpar_spark.plans import initial
+
+    g = make()
+    full = _full_pool_loop(g, 0.03, seed=5)
+    calls = []
+    fm = initial.fm_refine_2way
+    monkeypatch.setattr(initial, "fm_refine_2way", lambda *a, **kw: calls.append(1) or fm(*a, **kw))
+    part = pool_bipartition(g, 0.03, seed=5)
+    assert np.array_equal(part, full)
+    if cut_of(g, full) == 0:
+        assert len(calls) < 4 * len(initial._PORTFOLIO)  # the exit fired

@@ -106,7 +106,10 @@ def kernel_hashes(g: SmallGraph) -> dict[str, str]:
 
 
 # recorded with the numpy-slice kernels (per-move gain recomputation,
-# list.pop(0) BFS queues) that the list-based kernels replaced
+# list.pop(0) BFS queues) that the list-based kernels replaced; the
+# best_of pins of planted_hub and weighted_er since the driver coarsener
+# pairs stalled singletons and pools its coarsest graph under the input's
+# caps (grid8 is below the contraction limit and never coarsens)
 EXPECTED = {
     "grid8": {
         "random": "eebd671a8e15", "bfs_alternating": "a7a78791daf0",
@@ -122,7 +125,7 @@ EXPECTED = {
         "bfs_longer_queue": "a5058431022a", "bfs_shorter_queue": "84617d0a5c01",
         "ggg": "7a2439c4bf8e", "fm_simple": "18253e1237ff", "fm_adaptive": "791cc97cbb9f",
         "fm_after_bfs": "95fb90241ec8", "lp_cluster_seq": "4c5ed44e2692",
-        "best_of_k4_t1": "e9fdf66de9f2", "best_of_k8_t1": "61fbcb92bba5",
+        "best_of_k4_t1": "d753a56e3e11", "best_of_k8_t1": "9f43c3a4a888",
     },
     "weighted_er": {
         "random": "796ecc4a8911", "bfs_alternating": "e81148bf7b6f",
@@ -130,7 +133,7 @@ EXPECTED = {
         "bfs_longer_queue": "c9ef05ca26d7", "bfs_shorter_queue": "7a08fb781e0c",
         "ggg": "7d72bdd6f523", "fm_simple": "ffff21684701", "fm_adaptive": "6781b7534f19",
         "fm_after_bfs": "bcc0f359599e", "lp_cluster_seq": "c5e113b64d34",
-        "best_of_k4_t1": "dda9dadadd19", "best_of_k8_t1": "f40c29e4b149",
+        "best_of_k4_t1": "7fd875986591", "best_of_k8_t1": "a74830fd719a",
     },
 }
 

@@ -197,3 +197,37 @@ def test_in_memory_and_spark_paths_both_verify(spark):
         v = verify_partition(g, res.partition, k, eps)
         assert v.complete and v.k == k and v.feasible
         assert v.cut == res.cut
+
+
+def test_collected_graph_ignores_row_order():
+    """The driver graph is built from rows in whatever order Spark delivers
+    them; shuffled node and edge rows give the same CSR and the same labels."""
+    import pandas as pd
+
+    from kaminpar_spark.plans.initial import best_of_bisections
+    from kaminpar_spark.plans.partitioner import small_graph
+
+    rng = np.random.default_rng(3)
+    n = 120
+    und = {(int(a), int(b)) for a, b in rng.integers(0, n, size=(400, 2)) if a < b}
+    u = np.array(sorted(und))
+    w = rng.integers(1, 6, size=len(u))
+    ids = 7 * np.arange(n) + 3  # sparse ids, remapped to 0..n-1 by id order
+    nodes = pd.DataFrame({"id": ids, "weight": rng.integers(1, 4, size=n)})
+    edges = pd.DataFrame({
+        "src": ids[np.concatenate([u[:, 0], u[:, 1]])],
+        "dst": ids[np.concatenate([u[:, 1], u[:, 0]])],
+        "weight": np.concatenate([w, w]),
+    })
+    results = []
+    for seed in (0, 1, 2):
+        shuffle = np.random.default_rng(seed)
+        sg, got_ids = small_graph(
+            nodes.iloc[shuffle.permutation(n)], edges.iloc[shuffle.permutation(len(edges))]
+        )
+        assert np.array_equal(got_ids, ids)
+        labels = best_of_bisections(sg, 4, 0.03, seeds=[42])
+        results.append((sg.indptr, sg.indices, sg.eweights, sg.nweights, labels))
+    for other in results[1:]:
+        for a, b in zip(results[0], other):
+            assert np.array_equal(a, b)
