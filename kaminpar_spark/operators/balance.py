@@ -11,20 +11,19 @@ BSP re-expression per round (deterministic, no CAS):
    parallel_balancer.cc:219),
 2. quantize each candidate's relative gain into a bounded gain bucket
    (``_gain_bucket``: floor clamped to +-BAL_GAIN_BUCKETS, plus one bottom
-   bucket for the fallback movers) — the W4 priority order, kept per group
-   instead of per mover,
-3. admit per overloaded source block against its overload, then per target
-   against its residual capacity (``_grouped_admission``): sum weight per
-   (key, bucket), take a cumulative sum over that small table best bucket
-   first, admit every bucket that fits the remaining budget whole, and admit
-   the single boundary bucket's movers whose id-hash fraction falls below
-   remaining/bucket weight. No window ever sorts individual movers,
+   bucket for the fallback movers) — the W4 priority order,
+3. rank movers by (gain bucket desc, id asc) and admit with
+   ``labelprop.admit``'s exact weight ahead: per overloaded source block
+   while the weight ahead of a mover is below the block's overload (the
+   reference pops movers while the block is still overloaded), then per
+   target while the weight ahead plus the mover's own fits the target's
+   residual capacity,
 4. repeat until total_overload == 0 or max_rounds (``balance``).
 
-Contract: the boundary bucket admits by hash fraction, so one
-``balance_round`` matches each budget only in expectation. It may move more
-or less weight than a source's overload, and it may push a feasible target
-past its residual capacity; ``balance`` therefore re-measures the block weights and repeats rounds
+Contract: one ``balance_round`` never takes a block over its cap that was
+under it, and each overloaded source offers movers until their weight
+covers its overload. A source whose movers the targets turn away stays
+overloaded; ``balance`` re-measures the block weights and repeats rounds
 until no block is over its cap (or ``max_rounds`` runs out).
 
 Fallback targets: nodes with no feasible adjacent block are sent to the
@@ -34,10 +33,10 @@ move, parallel_balancer.cc:262-283).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from kaminpar_spark.graph import GraphFrame
-from kaminpar_spark.operators.labelprop import label_scores
+from kaminpar_spark.operators.labelprop import admit, label_scores
 from kaminpar_spark.plans.lineage import truncate
 from kaminpar_spark.plans.superstep import run_supersteps
 
@@ -160,31 +159,27 @@ def balance_round(
     best = best.select("id", "block", "weight", "gain", "target", "rel_gain").unionByName(
         no_target
     )
-    # admit per source block (then per target): gain-ordered cumulative
-    # weight <= budget, computed over (key, gain-bucket) GROUPS instead of
-    # individual movers. The previous per-mover windows
-    # (Window.partitionBy(block/target).orderBy(rel_gain, id)) sorted an
-    # overloaded block's ENTIRE mover set in one task — measured 6.81
-    # max/p50 straggler with one block holding 30% of all nodes
-    # (BENCH/SKEW.md balance scenario). The grouped shape hard-bounds every
-    # window partition at <= 2*BAL_GAIN_BUCKETS+3 group rows regardless of
-    # mover count: buckets strictly above the boundary admit whole, the
-    # boundary bucket admits a deterministic hash-fraction of its movers
-    # sized to the remaining budget (expected-weight exact; within a bucket
-    # gains are equal up to quantization, so any same-size subset is equally
-    # good — the old id-ascending tiebreak was just as arbitrary).
     overload = over.select(
         "block", (F.col("bweight") - F.col("cap")).alias("overload")
     )
-    # materialize: best feeds the source group aggregate AND the source
-    # admission join (and, through admitted_src, the target pair) — the
-    # candidate/gain plan above is the expensive part and would re-run per
-    # consumer (measured 2x kernel wall on the skew bench unmaterialized)
+    # materialize: best feeds both windows of the source admission (and,
+    # through it, the target admission) — the candidate/gain plan above is
+    # the expensive part and would re-run per consumer
     best = truncate(best.withColumn("gq", _gain_bucket(F.col("rel_gain"))))
-    admitted_src = _grouped_admission(best, overload, "block", "overload")
+    # the budget tables hold k rows: broadcast them, so an overloaded block
+    # or a popular target is no hot join key
+    src = (
+        admit(best, "block", "gq")
+        .join(F.broadcast(overload), "block")
+        .where(F.col("ahead") < F.col("overload"))
+        .drop("ahead", "overload")
+    )
     resid_t = resid.select(F.col("label").alias("target"), "residual")
-    admitted = _grouped_admission(admitted_src, resid_t, "target", "residual").select(
-        "id", F.col("target").cast("int").alias("new_block")
+    admitted = (
+        admit(src, "target", "gq")
+        .join(F.broadcast(resid_t), "target")
+        .where(F.col("ahead") + F.col("weight") <= F.col("residual"))
+        .select("id", F.col("target").cast("int").alias("new_block"))
     )
     return (
         partition.join(admitted, "id", "left")
@@ -193,16 +188,14 @@ def balance_round(
 
 
 BAL_GAIN_BUCKETS = 4096
-_BAL_MIX_MULT = 2654435761  # Knuth multiplicative mixer; ids < 2^31
-_BAL_MIX_MOD = (1 << 31) - 1
 
 
 def _gain_bucket(col: F.Column) -> F.Column:
     """Monotone, hard-bounded quantization of rel_gain: floor clamped to
     +-BAL_GAIN_BUCKETS; the -inf fallback class gets its own bottom bucket.
-    Bounded range is what makes the admission window's per-key partition
-    size independent of mover count. floor + clamp are bit-identical across
-    Spark and DuckDB (one IEEE floor on a double)."""
+    The bounded range bounds the number of distinct priorities, so
+    ``admit``'s group table stays small whatever the gains. floor + clamp
+    are bit-identical across Spark and DuckDB (one IEEE floor on a double)."""
     return (
         F.when(col == F.lit(float("-inf")), F.lit(-(BAL_GAIN_BUCKETS + 2)))
         .otherwise(
@@ -212,43 +205,6 @@ def _gain_bucket(col: F.Column) -> F.Column:
             )
         )
         .cast("long")
-    )
-
-
-def _grouped_admission(
-    df: DataFrame, budgets: DataFrame, key: str, budget_col: str
-) -> DataFrame:
-    """Admit rows of ``df`` (carrying id, weight, gq) under per-``key``
-    weight budgets, draining gain buckets best-first: a bucket whose weight
-    fits the remaining budget is admitted whole; the boundary bucket admits
-    rows whose deterministic id-hash fraction falls below rem/gw. One hash
-    aggregate + one window over AT MOST 2*BAL_GAIN_BUCKETS+3 group rows per
-    key + one equi-join — no per-mover sort anywhere."""
-    grp = df.groupBy(key, "gq").agg(F.sum("weight").alias("gw"))
-    wg = (
-        Window.partitionBy(key)
-        .orderBy(F.desc("gq"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    grp = (
-        grp.join(budgets, key)
-        .withColumn("above_w", F.coalesce(F.sum("gw").over(wg), F.lit(0)))
-        .withColumn("rem", F.col(budget_col) - F.col("above_w"))
-        .where(F.col("rem") > 0)
-        .select(key, "gq", "gw", "rem")
-    )
-    hfrac = F.pmod(F.col("id") * F.lit(_BAL_MIX_MULT), F.lit(_BAL_MIX_MOD)).cast(
-        "double"
-    ) / F.lit(float(_BAL_MIX_MOD))
-    # broadcast the group table: it is <= (2*BAL_GAIN_BUCKETS+3) rows per
-    # distinct key BY CONSTRUCTION, and an equi-join on (key, gq) would
-    # otherwise hash ALL of a boundary bucket's movers (one composite key)
-    # into a single task — the residual 4.02 straggler the skew bench
-    # measured before this hint; broadcast keeps the mover side unshuffled.
-    return (
-        df.join(F.broadcast(grp), [key, "gq"])
-        .where((F.col("gw") <= F.col("rem")) | (hfrac * F.col("gw") < F.col("rem")))
-        .drop("gw", "rem")
     )
 
 

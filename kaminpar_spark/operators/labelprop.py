@@ -7,16 +7,17 @@ block refinement (parallel_label_propagation_refiner.h:8). We mirror that:
 constraint and admission policy:
 
 - **community** (north-rule LPA): no weight cap.
-- **clustering** (coarsening, I2): soft cap ``max_cluster_weight`` (F5) —
-  a move is admitted only if the target cluster's weight at superstep start
-  plus the mover's weight fits. BSP can jointly overflow a cluster slightly,
-  like the reference's CAS races do (accept at
-  parallel_label_propagation_coarsener.h:134-139 is also approximate).
-- **refinement** (I3): HARD cap per target block — candidate movers are
-  ranked by gain within each target block and admitted in order while the
-  block's residual capacity lasts (Window + cumulative weight), the
-  deterministic BSP replacement for the reference's CAS admission
-  (parallel_label_propagation.h:229-243). Never overloads a block.
+- **clustering** (coarsening, I2): cap ``max_cluster_weight`` (F5) per
+  target cluster.
+- **refinement** (I3): per-block capacity ``hard_caps``.
+
+Both caps use one admission rule (``admit``): candidate movers are ranked
+by gain within each target label and admitted in that order while the
+label's start-of-step weight plus the admitted weight fits its capacity.
+LP moves never take a label over its capacity, so BSP cannot jointly
+overflow a cluster: this is the deterministic BSP replacement for the
+reference's CAS accept (parallel_label_propagation.h:229-243,
+parallel_label_propagation_coarsener.h:134-139).
 
 One superstep (all configs):
     scores  = edges ⋈ labels on src (GraphFrame.gather — on a prepared graph
@@ -109,13 +110,13 @@ def lp_step(
 ) -> DataFrame:
     """One LP superstep over state (id, label, weight).
 
-    max_cluster_weight: soft cap (clustering config).
-    hard_caps: (label, capacity) — refinement config; admission by gain order
-               within residual capacity (see module docstring).
+    max_cluster_weight: cluster weight cap (clustering config).
+    hard_caps: (label, capacity) — refinement config.
+    Both caps admit by gain order within residual capacity (see ``admit``).
     Returns state with columns (id, label, weight, moved:int).
 
     Plan-size note: the candidate table is referenced several times below
-    (admission windows, label weights). Vertex-scale intermediates are
+    (admission, label weights). Vertex-scale intermediates are
     eagerly localCheckpointed to keep Catalyst's plan tree flat — without
     this, repeated self-references over unknown-size leaves send the
     optimizer's BigInt size estimation into combinatorial blowup.
@@ -155,27 +156,24 @@ def lp_step(
     # stampede: every neighbor of a hub joins it in the same superstep
     # (observed: cap 6, resulting cluster weight 96 on the transcript graph).
     # The reference's CAS loop serializes those joins
-    # (parallel_label_propagation.h:229-243); the window admission is the
+    # (parallel_label_propagation.h:229-243); ``admit`` is the
     # deterministic bulk-synchronous equivalent.
     gain = (F.col("best_score") - F.col("cur_score")).alias("gain")
-    movers = cand.where(F.col("wants")).select(
-        "id", "cur_label", "best_label", "weight", gain
-    )
+    movers = cand.where(F.col("wants")).select("id", "best_label", "weight", gain)
     used = label_w.select(F.col("label").alias("best_label"), "label_weight")
     if hard_caps is not None:
-        caps = hard_caps.select(F.col("label").alias("best_label"), "capacity")
-        movers = movers.join(caps, "best_label", "left")
+        # k rows: broadcast, so a block that most movers target is no hot
+        # join key
+        room = hard_caps.select(F.col("label").alias("best_label"), "capacity")
+        room = F.broadcast(room.join(used, "best_label", "left"))
     else:
-        movers = movers.withColumn("capacity", F.lit(max_cluster_weight))
-    w_adm = Window.partitionBy("best_label").orderBy(
-        F.desc("gain"), F.asc("id")
-    ).rowsBetween(Window.unboundedPreceding, 0)
+        room = used.withColumn("capacity", F.lit(max_cluster_weight))
     admitted = (
-        movers.join(used, "best_label", "left")
-        .withColumn("cum_w", F.sum("weight").over(w_adm))
+        admit(movers, "best_label", "gain")
+        .join(room, "best_label", "left")
         .where(
-            F.coalesce("label_weight", F.lit(0)) + F.col("cum_w")
-            <= F.coalesce("capacity", F.lit(1 << 62))
+            F.col("ahead") + F.col("weight")
+            <= F.coalesce("capacity", F.lit(1 << 62)) - F.coalesce("label_weight", F.lit(0))
         )
         .select("id", F.lit(True).alias("admit"))
     )
@@ -188,6 +186,44 @@ def lp_step(
         F.when(F.col("admit"), F.col("best_label")).otherwise(F.col("cur_label")).alias("label"),
         "weight",
         F.when(F.col("admit"), F.lit(1)).otherwise(F.lit(0)).alias("moved"),
+    )
+
+
+ADMIT_BLOCK = 1024  # ids per admission group: the bound on admit's per-mover window
+
+
+def admit(movers: DataFrame, key: str, priority: str) -> DataFrame:
+    """``movers`` (carrying ``id``, ``weight``, ``key``, ``priority``) plus
+    ``ahead``: the summed weight of the movers with the same ``key`` that
+    come before each mover in the order (``priority`` desc, ``id`` asc).
+    Callers admit with a one-line rule on it: ``ahead + weight <= budget``
+    fits a budget, ``ahead < budget`` covers one.
+
+    No window sorts a key's movers in one task (a heavy key — one target
+    block of k — would make that task a straggler). Movers are grouped per
+    (key, priority, id // ADMIT_BLOCK); the weight ahead of each group comes
+    from a window over that group table, and each mover adds the weight
+    ahead of it inside its group, from a window of at most ADMIT_BLOCK
+    rows. ``id // ADMIT_BLOCK`` rises with ``id``, so the sum is exact in
+    the full order. A key's group table holds at most (distinct
+    priorities) x (id range / ADMIT_BLOCK) rows: small for the balancer's
+    bounded gain buckets and for LP's small integer gains."""
+    blk = F.floor(F.col("id") / ADMIT_BLOCK).alias("_blk")
+    m = movers.select("*", blk)
+    grp = [key, priority, "_blk"]
+    before = (
+        Window.partitionBy(key)
+        .orderBy(F.desc(priority), F.asc("_blk"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    groups = m.groupBy(*grp).agg(F.sum("weight").alias("_gw")).select(
+        *grp, F.coalesce(F.sum("_gw").over(before), F.lit(0)).alias("_gahead")
+    )
+    inside = Window.partitionBy(*grp).orderBy("id").rowsBetween(Window.unboundedPreceding, -1)
+    return m.select(
+        "*", F.coalesce(F.sum("weight").over(inside), F.lit(0)).alias("_ahead")
+    ).join(groups, grp).select(
+        *movers.columns, (F.col("_gahead") + F.col("_ahead")).alias("ahead")
     )
 
 

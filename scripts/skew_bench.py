@@ -1,6 +1,6 @@
 """Planted-skew benches (VERDICT r3 item 7, extended per VERDICT r4 item 7).
 
-Three kernels whose shuffles a skewed key could concentrate on one task,
+Four kernels whose shuffles a skewed key could concentrate on one task,
 each MEASURED on a deterministically planted worst case instead of assumed
 safe, via per-stage task-time straggler ratios (max task wall / p50 task
 wall) parsed from the Spark event log. Done-bar per scenario: worst-stage
@@ -15,15 +15,17 @@ ratio < 4.
   lsh_candidate_pairs with the max_bucket_size circuit breaker armed
   (mitigations: oversized-bucket exclusion + identical-signature star join).
 - ``balance``: one overloaded block holds ~30% of all nodes, making them
-  ALL movers through the gain-ordered admission window partitioned by
-  source block (mitigation under test: the window is movers-only and
-  cumulative admission is one sort per overloaded block — this measures
-  whether that residual per-block sort stays under the bar).
+  ALL movers of one source key in ``labelprop.admit`` (mitigation under
+  test: admit groups movers per (key, priority, id // ADMIT_BLOCK), so no
+  window sorts more than one group's movers).
+- ``refine``: one hard-cap ``lp_step`` in which one block is the target of
+  every mover (a quarter of the giant community starts in the tail blocks
+  and wants back into block 0): the same admission, keyed by target.
 
 Inputs are deterministic closed-form column expressions from spark.range —
 no driver-side materialization, no external data.
 
-Usage: python scripts/skew_bench.py [--scenarios louvain,lsh,balance]
+Usage: python scripts/skew_bench.py [--scenarios louvain,lsh,balance,refine]
                                     [--nodes 2000000] [--docs 400000]
                                     [--cpus 8]
 Writes BENCH/SKEW.md (one section per scenario).
@@ -284,15 +286,67 @@ def scenario_balance(args) -> dict:
     spark.stop()
     return {
         "name": "balance",
-        "title": "Balancer admission window (one block overloaded with 30% of nodes)",
+        "title": "Balancer admission (one block overloaded with 30% of nodes)",
         "desc": [
             f"Planted input: {n:,} nodes in k={k} blocks; block 0 holds",
             f"{GIANT_SHARE:.0%} of all nodes against a cap of {cap:,}, so every",
-            "one of its nodes is a mover and the gain-ordered cumulative",
-            "admission window (Window.partitionBy(source block)) must sort",
-            "ALL of them in one partition — the engine's one deliberately",
-            "retained per-key sort. This measures whether the movers-only",
-            "restriction keeps that residual sort under the straggler bar.",
+            "one of its nodes is a mover of ONE source key in the exact",
+            "admission (`labelprop.admit`). This measures whether grouping",
+            "movers per (key, priority, id // ADMIT_BLOCK) keeps that key's",
+            "ranking under the straggler bar.",
+        ],
+        "wall": wall,
+        "result": f"admitted moves: {moved:,}",
+        "rows": stage_straggler_ratios(event_dir, after_ms=t0 * 1e3),
+    }
+
+
+def scenario_refine(args) -> dict:
+    """One hard-cap LP refinement step whose movers all target block 0."""
+    from pyspark.sql import functions as F
+
+    from kaminpar_spark.operators.labelprop import lp_step
+
+    spark, event_dir = _spark_with_events("refine", args.cpus)
+    g, _ = build_graph(spark, args.nodes)
+    g.edges.persist()
+    n = g.num_nodes()
+    k = 8
+    g_n = int(args.nodes * GIANT_SHARE)
+    # the giant community sits in block 0 except every 4th node, which
+    # starts in a tail block; tail communities stay whole in blocks 1..k-1
+    state = g.nodes.select(
+        "id",
+        F.when((F.col("id") < g_n) & (F.col("id") % 4 != 0), F.lit(0))
+        .when(F.col("id") < g_n, 1 + F.col("id") % (k - 1))
+        .otherwise(1 + F.floor((F.col("id") - g_n) / SMALL_COMM) % (k - 1))
+        .cast("long")
+        .alias("label"),
+        "weight",
+    )
+    state.persist()
+    state.count()
+    # block 0 has room for about half of the would-be movers
+    cap0 = int(g_n * 0.75) + g_n // 8
+    caps = spark.createDataFrame(
+        [(b, cap0 if b == 0 else n) for b in range(k)], "label long, capacity long"
+    )
+    print(f"[refine] {n:,} nodes, k={k}, block 0 cap={cap0:,}")
+
+    t0 = time.time()
+    moved = lp_step(g, state, hard_caps=caps, semi_sync=False).agg(F.sum("moved")).first()[0]
+    wall = time.time() - t0
+    spark.stop()
+    return {
+        "name": "refine",
+        "title": "LP refinement admission (one block is the target of every mover)",
+        "desc": [
+            f"Planted input: {n:,} nodes in k={k} blocks; every 4th node of",
+            f"the giant community ({GIANT_SHARE:.0%} of all nodes) starts in a",
+            "tail block, so all of them want back into block 0, whose",
+            f"capacity ({cap0:,}) takes about half. One hard-cap `lp_step`",
+            "(semi_sync off): its admission ranks every mover under ONE",
+            "target key.",
         ],
         "wall": wall,
         "result": f"admitted moves: {moved:,}",
@@ -304,12 +358,13 @@ SCENARIOS = {
     "louvain": scenario_louvain,
     "lsh": scenario_lsh,
     "balance": scenario_balance,
+    "refine": scenario_refine,
 }
 
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--scenarios", default="louvain,lsh,balance")
+    ap.add_argument("--scenarios", default="louvain,lsh,balance,refine")
     ap.add_argument("--nodes", type=int, default=2_000_000)
     ap.add_argument("--docs", type=int, default=400_000)
     ap.add_argument("--cpus", type=int, default=8)

@@ -31,8 +31,9 @@ def test_lp_two_cliques(spark):
 
 
 def test_lp_cluster_weight_cap(spark):
-    """With max_cluster_weight=4 no cluster may exceed ~4 total weight
-    (soft cap: BSP may overflow by at most one concurrent join round)."""
+    """With max_cluster_weight=4 no cluster may exceed 4 total weight: the
+    cumulative admission counts every mover ranked ahead into a cluster, so
+    concurrent BSP joins cannot overflow it."""
     g = two_cliques(spark)
     labels = label_propagation(g, max_iters=12, max_cluster_weight=4)
     sizes = labels.groupBy("label").agg(F.count("*").alias("n")).collect()
