@@ -162,9 +162,8 @@ def balance_round(
     overload = over.select(
         "block", (F.col("bweight") - F.col("cap")).alias("overload")
     )
-    # materialize: best feeds both windows of the source admission (and,
-    # through it, the target admission) — the candidate/gain plan above is
-    # the expensive part and would re-run per consumer
+    # materialize: the two admissions below stack windows and joins on the
+    # candidate/gain plan above; a flat leaf keeps their plan small
     best = truncate(best.withColumn("gq", _gain_bucket(F.col("rel_gain"))))
     # the budget tables hold k rows: broadcast them, so an overloaded block
     # or a popular target is no hot join key
@@ -193,9 +192,9 @@ BAL_GAIN_BUCKETS = 4096
 def _gain_bucket(col: F.Column) -> F.Column:
     """Monotone, hard-bounded quantization of rel_gain: floor clamped to
     +-BAL_GAIN_BUCKETS; the -inf fallback class gets its own bottom bucket.
-    The bounded range bounds the number of distinct priorities, so
-    ``admit``'s group table stays small whatever the gains. floor + clamp
-    are bit-identical across Spark and DuckDB (one IEEE floor on a double)."""
+    The clamp ranks every rel_gain beyond +-BAL_GAIN_BUCKETS by id alone.
+    floor + clamp are bit-identical across Spark and DuckDB (one IEEE floor
+    on a double)."""
     return (
         F.when(col == F.lit(float("-inf")), F.lit(-(BAL_GAIN_BUCKETS + 2)))
         .otherwise(

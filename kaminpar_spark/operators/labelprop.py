@@ -189,9 +189,6 @@ def lp_step(
     )
 
 
-ADMIT_BLOCK = 1024  # ids per admission group: the bound on admit's per-mover window
-
-
 def admit(movers: DataFrame, key: str, priority: str) -> DataFrame:
     """``movers`` (carrying ``id``, ``weight``, ``key``, ``priority``) plus
     ``ahead``: the summed weight of the movers with the same ``key`` that
@@ -199,32 +196,16 @@ def admit(movers: DataFrame, key: str, priority: str) -> DataFrame:
     Callers admit with a one-line rule on it: ``ahead + weight <= budget``
     fits a budget, ``ahead < budget`` covers one.
 
-    No window sorts a key's movers in one task (a heavy key — one target
-    block of k — would make that task a straggler). Movers are grouped per
-    (key, priority, id // ADMIT_BLOCK); the weight ahead of each group comes
-    from a window over that group table, and each mover adds the weight
-    ahead of it inside its group, from a window of at most ADMIT_BLOCK
-    rows. ``id // ADMIT_BLOCK`` rises with ``id``, so the sum is exact in
-    the full order. A key's group table holds at most (distinct
-    priorities) x (id range / ADMIT_BLOCK) rows: small for the balancer's
-    bounded gain buckets and for LP's small integer gains."""
-    blk = F.floor(F.col("id") / ADMIT_BLOCK).alias("_blk")
-    m = movers.select("*", blk)
-    grp = [key, priority, "_blk"]
-    before = (
+    One window per key: all movers of a key are ranked in one task, so a
+    key that most movers share (one target block of k) is one long task.
+    Splitting heavy keys did not pay on a 4-core host (BENCH/SKEW.md,
+    "Admission shapes")."""
+    ahead = (
         Window.partitionBy(key)
-        .orderBy(F.desc(priority), F.asc("_blk"))
+        .orderBy(F.desc(priority), F.asc("id"))
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    groups = m.groupBy(*grp).agg(F.sum("weight").alias("_gw")).select(
-        *grp, F.coalesce(F.sum("_gw").over(before), F.lit(0)).alias("_gahead")
-    )
-    inside = Window.partitionBy(*grp).orderBy("id").rowsBetween(Window.unboundedPreceding, -1)
-    return m.select(
-        "*", F.coalesce(F.sum("weight").over(inside), F.lit(0)).alias("_ahead")
-    ).join(groups, grp).select(
-        *movers.columns, (F.col("_gahead") + F.col("_ahead")).alias("ahead")
-    )
+    return movers.select("*", F.coalesce(F.sum("weight").over(ahead), F.lit(0)).alias("ahead"))
 
 
 def merge_singleton_clusters(
